@@ -7,6 +7,14 @@ semantics are a distributed ``left_anti`` join against a key-only scan of
 the target table: the planner broadcasts the smaller side or shuffles on
 the key, the driver never sees a row.
 
+Each table loads in two halves: a read-only *stage* (key scan, anti-join
+and ONE observed ``count()`` of the persisted new rows, which yields both
+the inserted and the ignored count) and a *commit* (the write, from that
+cache). Every action re-plans the whole star-schema lineage, and at
+daily-batch scale that planning costs more than the data, so a table
+costs one action plus its write. :meth:`Warehouse.load_ordered` runs the
+stages concurrently and the commits one at a time in FK order.
+
 Warehouse format: parquet directories (one per table) under a base dir —
 the fact table partitioned by order date so the report queries get
 partition pruning. :mod:`.jdbc` provides the JDBC mirror (S4/S5 parity):
@@ -17,10 +25,13 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.relational import anti_join
 
@@ -46,6 +57,19 @@ class LoadResult:
     inserted: int
     ignored: int
     ok: bool
+
+
+def _observed_count(obs: Observation) -> int:
+    """The single count metric of a fired observation.
+
+    When adaptive execution proves the observed subtree empty at run time
+    (an empty source under a shuffled anti-join), it replaces the subtree
+    with an empty relation and the observation fires with no metrics at
+    all; ``Observation.get`` cannot convert that empty row, so read it
+    from the JVM side. No metrics means the source had no rows.
+    """
+    row = obs._jo.getRow()
+    return int(row.getLong(0)) if row.length() else 0
 
 
 class Warehouse:
@@ -91,38 +115,103 @@ class Warehouse:
         return self.spark.read.parquet(self.path(table)).select(pk)
 
     def incremental_append(self, df: DataFrame, table: str) -> LoadResult:
-        """PK-idempotent append (``/root/reference/src/load.py:20-68``).
-
-        1. key-only scan of existing rows (missing table → everything new)
-        2. distributed left-anti join on the PK
-        3. append-mode parquet write (fact: date-partitioned)
+        """PK-idempotent append (the reference's ``src/load.py:20-68``):
+        :meth:`_stage` then :meth:`_commit` for one table.
 
         Single-writer assumption as in the reference (daily batch); a
         concurrent-writer warehouse would use Delta MERGE instead.
         """
+        return self._isolated(table, lambda: self._stage(df, table))
+
+    def load_ordered(self, tables: dict[str, DataFrame]) -> list[LoadResult]:
+        """Ordered load with per-table failure isolation
+        (the reference's ``src/main.py:72-94``).
+
+        The read-only stages run concurrently, one worker thread per
+        table: each reads only its own target's keys, so no stage can
+        see another table's commit. The commits then run one at a time
+        in the order of ``tables`` (parent dims → child dim → fact), each
+        as soon as its own stage is done. A failing table, in either
+        half, does not stop the rest.
+
+        Workers inherit the caller's local properties and tags (job
+        group, scheduler pool), so their jobs stay attributed to the
+        caller. Each task gets its own wrapper: a wrapper clones the
+        properties once, and threads sharing one clone would overwrite
+        each other's SQL execution id.
+        """
+        with ThreadPoolExecutor(
+            max_workers=max(len(tables), 1), thread_name_prefix="load-stage"
+        ) as pool:
+            staged = [
+                (name, pool.submit(
+                    inheritable_thread_target(self.spark)(self._stage), df, name
+                ))
+                for name, df in tables.items()
+            ]
+            return [self._isolated(name, fut.result) for name, fut in staged]
+
+    def _stage(
+        self, df: DataFrame, table: str
+    ) -> tuple[DataFrame | None, LoadResult]:
+        """Read-only half of a load: one action, no write.
+
+        1. key-only scan of existing rows (missing table → everything new)
+        2. distributed left-anti join on the PK
+        3. one ``count()`` of the persisted new rows, with an observation
+           on the source that counts the rows seen on the way
+
+        The count is the number of rows kept and the observation the rows
+        seen, so ``ignored = seen - kept`` comes from the same single
+        materialization that the write later reads from the cache — a
+        nondeterministic source cannot make the reported counts disagree
+        with what is written. A source with no rows keeps none, which is
+        the empty-source guard (P11): nothing is written, not even a
+        schema-only file. Returns the rows to write (``None`` when none)
+        and the result.
+        """
+        pk = PK_MAP.get(table)
+        if pk is None:
+            logger.warning("table %s has no PK mapping; direct append", table)
+            return df, LoadResult(table, -1, 0, True)
+
+        seen = Observation()
+        source = df.observe(seen, F.count(F.lit(1)))
+        existing = self.existing_keys(table, pk)
+        new_rows = source if existing is None else anti_join(source, existing, pk)
+        new_rows = new_rows.persist()
         try:
-            pk = PK_MAP.get(table)
-            if pk is None:
-                logger.warning("table %s has no PK mapping; direct append", table)
-                self._write(df, table)
-                return LoadResult(table, -1, 0, True)
+            inserted = new_rows.count()
+            total = _observed_count(seen)
+        except Exception:
+            new_rows.unpersist()
+            raise
+        if not inserted:
+            new_rows.unpersist()
+            return None, LoadResult(table, 0, total, True)
+        return new_rows, LoadResult(table, inserted, total - inserted, True)
 
-            existing = self.existing_keys(table, pk)
-            new_rows = df if existing is None else anti_join(df, existing, pk)
+    def _commit(self, rows: DataFrame | None, result: LoadResult) -> LoadResult:
+        """Write half of a load: append the staged rows, then release
+        the cache :meth:`_stage` made for them."""
+        if rows is None:
+            return result
+        try:
+            self._write(rows, result.table)
+        finally:
+            # inserted is -1 on the direct append: the caller's frame,
+            # whose caching is not ours to undo
+            if result.inserted > 0:
+                rows.unpersist()
+        return result
 
-            # Persist so the reported count and the write observe ONE
-            # materialization of the anti-join — without it the plan runs
-            # twice and a nondeterministic source could make the count
-            # disagree with what was actually written.
-            new_rows = new_rows.persist()
-            try:
-                inserted = new_rows.count()
-                total = df.count()
-                if inserted:
-                    self._write(new_rows, table)
-            finally:
-                new_rows.unpersist()
-            return LoadResult(table, inserted, total - inserted, True)
+    def _isolated(
+        self, table: str, stage: Callable[[], tuple[DataFrame | None, LoadResult]]
+    ) -> LoadResult:
+        """Commit the output of ``stage()``; any failure marks only this
+        table failed."""
+        try:
+            return self._commit(*stage())
         except Exception:
             logger.exception("incremental load failed for %s", table)
             return LoadResult(table, 0, 0, False)
@@ -135,19 +224,6 @@ class Warehouse:
             df = df.withColumn(part_col, F.to_date(F.col(src)))
             writer = df.write.mode("append").partitionBy(part_col)
         writer.parquet(self.path(table))
-
-    def load_ordered(self, tables: dict[str, DataFrame]) -> list[LoadResult]:
-        """Ordered load with per-table failure isolation
-        (``/root/reference/src/main.py:72-94``): parent dims → child dim →
-        fact; one failing table doesn't stop the rest."""
-        results = []
-        for name, df in tables.items():
-            if df.isEmpty():
-                logger.info("table %s: source empty, skipping", name)
-                results.append(LoadResult(name, 0, 0, True))
-                continue
-            results.append(self.incremental_append(df, name))
-        return results
 
     def register_views(self) -> None:
         for table in PK_MAP:

@@ -24,9 +24,11 @@ def anti_join(df: DataFrame, existing: DataFrame, keys: str | Sequence[str]) -> 
     (``/root/reference/src/load.py:47-51``). Here: a distributed
     ``left_anti`` join — Catalyst broadcasts ``existing`` when small,
     shuffles both sides on the key otherwise; never touches the driver.
+    No ``distinct`` on ``existing``: duplicate keys there cannot change a
+    left-anti result, and deduplicating them costs a shuffle stage.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
-    return df.join(existing.select(*keys).distinct(), on=keys, how="left_anti")
+    return df.join(existing.select(*keys), on=keys, how="left_anti")
 
 
 def dedupe_first(

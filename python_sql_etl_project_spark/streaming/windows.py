@@ -109,7 +109,7 @@ def stream_events(
     return raw
 
 
-def _stream_state_partitions(spark: SparkSession) -> str:
+def _stream_state_partitions() -> str:
     """Shuffle-partition count for STATEFUL streaming runs (r13, guide
     §5 / r12-verdict item #1).
 
@@ -158,10 +158,12 @@ def _run_to_table(
     sizes the state-store instance count.
     """
     checkpoint = tempfile.mkdtemp(prefix=f"ck_{name}_")
+    # The swap is session-global: it assumes no other query runs on this
+    # session while the stream does.
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set(
-            "spark.sql.shuffle.partitions", _stream_state_partitions(spark)
+            "spark.sql.shuffle.partitions", _stream_state_partitions()
         )
         q = (
             df.writeStream.format("memory")

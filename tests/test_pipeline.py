@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
-from python_sql_etl_project_spark.load.incremental import Warehouse
+from python_sql_etl_project_spark.load.incremental import LoadResult, Warehouse
 from python_sql_etl_project_spark.plans.star_schema import build_star_schema
 from python_sql_etl_project_spark.report import format_message, get_sales_data
 from python_sql_etl_project_spark.sources.ingest import spark_df_from_pandas
@@ -57,6 +59,136 @@ def test_incremental_batch_appends_only_new(spark, loaded_warehouse):
     # simulate next day's batch: 1 known id + nothing else changed
     result = wh.incremental_append(batch.limit(5), "fct_transacciones")
     assert result.inserted == 0 and result.ignored == 5
+
+
+def _sedes(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"sede {i}") for i in ids], "id_sede int, nombre_sede string"
+    )
+
+
+def _data_files(path):
+    return sorted(
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
+
+
+def test_append_materializes_source_once(spark, tmp_path):
+    """One observed count per table: the source runs once, however many
+    counts the result reports, and the write reads the cache."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def passes(_name):
+        acc.add(1)
+        return True
+
+    seen = F.udf(passes, "boolean")
+    wh = Warehouse(spark, str(tmp_path))
+    assert wh.incremental_append(_sedes(spark, range(3)), "dim_sedes").ok
+    before = wh.read("dim_sedes").count()
+
+    # on a non-key column: a key predicate would be copied to the
+    # existing-key side of the join by constraint inference
+    source = _sedes(spark, range(8)).filter(seen("nombre_sede"))
+    result = wh.incremental_append(source, "dim_sedes")
+    assert acc.value == 8
+    assert result == LoadResult("dim_sedes", 5, 3, True)
+    assert wh.read("dim_sedes").count() - before == result.inserted
+
+
+def test_load_ordered_commits_in_fk_order_and_isolates_failures(
+    spark, tmp_path
+):
+    """Stages run concurrently, yet commits keep the reference's parent →
+    child → fact order (main.py:72-94); a stage that raises fails only
+    its own table; worker-thread jobs stay in the caller's job group."""
+    sc = spark.sparkContext
+
+    def boom(_key):
+        raise ValueError("stage failure")
+
+    tables = _tables(spark)
+    tables["dim_distribuidores"] = tables["dim_distribuidores"].filter(
+        F.udf(boom, "boolean")("id_distribuidor")
+    )
+    wh = Warehouse(spark, str(tmp_path))
+    written = []
+    write = wh._write
+
+    def record(df, table):
+        written.append(table)
+        write(df, table)
+
+    wh._write = record
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        it = jsc.statusStore().jobsList(None).iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(int(it.next().jobId()))
+        return ids
+
+    group = "load-ordered-contract"
+    before = job_ids()
+    sc.setJobGroup(group, group)
+    try:
+        results = wh.load_ordered(tables)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    order = [t for t in tables if t != "dim_distribuidores"]
+    assert written == order
+    assert [r.table for r in results] == list(tables)
+    by_table = {r.table: r for r in results}
+    assert by_table["dim_distribuidores"] == LoadResult(
+        "dim_distribuidores", 0, 0, False
+    )
+    assert all(by_table[t].ok for t in order)
+    assert by_table["fct_transacciones"].inserted == 5
+    assert by_table["dim_clientes"].inserted == 4
+    assert not wh.exists("dim_distribuidores")
+
+    new_jobs = job_ids() - before
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    # one staged count per table, at least, ran on the worker threads
+    assert len(new_jobs) >= len(tables)
+    assert new_jobs <= in_group
+
+
+@pytest.fixture(params=["broadcast", "shuffle"])
+def join_posture(request, spark):
+    """Both anti-join strategies: under a shuffled join, adaptive
+    execution prunes an empty source out of the plan, observation and
+    all."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if request.param == "shuffle":
+        spark.conf.set(key, "-1")
+    yield request.param
+    spark.conf.set(key, prev)
+
+
+def test_empty_source_guard(spark, tmp_path, join_posture):
+    """P11: an empty source loads nothing and writes nothing — no table
+    directory on a first load, no schema-only file on an existing one."""
+    empty = _sedes(spark, [])
+    wh = Warehouse(spark, str(tmp_path))
+    assert wh.load_ordered({"dim_sedes": empty}) == [
+        LoadResult("dim_sedes", 0, 0, True)
+    ]
+    assert not os.path.exists(wh.path("dim_sedes"))
+
+    assert wh.incremental_append(_sedes(spark, range(3)), "dim_sedes").ok
+    files = _data_files(wh.path("dim_sedes"))
+    assert wh.incremental_append(empty, "dim_sedes") == LoadResult(
+        "dim_sedes", 0, 0, True
+    )
+    assert _data_files(wh.path("dim_sedes")) == files
 
 
 def test_report_queries_and_rendering(spark, loaded_warehouse):

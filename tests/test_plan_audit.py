@@ -338,3 +338,30 @@ def test_lpa_rounds_stay_hashaggregate_single_exchange(spark, monkeypatch):
     assert "SortAggregate" not in plan, plan[:3000]
     assert plan.count("HashAggregate") >= 4 * g.LPA_ROUNDS  # 2 aggs × (partial+final)
     assert plan.count("REPARTITION_BY_COL") == g.LPA_ROUNDS
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan tree, through the adaptive wrapper."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.inputPlan())
+        return
+    children = node.children().iterator()
+    while children.hasNext():
+        yield from _plan_nodes(children.next())
+
+
+def test_anti_join_existing_side_is_not_deduplicated(spark):
+    """The existing-key side of ``anti_join`` is a bare key projection:
+    duplicate keys cannot change a left-anti result, so no aggregate and
+    no shuffle deduplicate them first. (``test_anti_join_is_set_difference``
+    pins the result with duplicate right-side keys.)"""
+    from python_sql_etl_project_spark.operators.relational import anti_join
+
+    new = spark.range(100).selectExpr("id AS k", "id AS v")
+    existing = spark.range(60).selectExpr("id % 20 AS k")
+    plan = anti_join(new, existing, "k")._jdf.queryExecution().executedPlan()
+    joins = [n for n in _plan_nodes(plan) if n.nodeName().endswith("Join")]
+    assert len(joins) == 1, plan.toString()
+    build = {n.nodeName() for n in _plan_nodes(joins[0].right())}
+    assert not build & {"HashAggregate", "Exchange"}, plan.toString()
