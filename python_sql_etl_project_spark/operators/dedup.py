@@ -31,6 +31,7 @@ from ..session import (
     read_table,
     read_table_parallel,
     release_caches,
+    snapshot,
     tag_release,
 )
 from . import text
@@ -68,16 +69,6 @@ _SHINGLES_CTE = f"""
 """
 
 
-#: Session-scoped shingle-stage memo, active only when
-#: ``SPARK_GRAFT_SHARED_SHINGLES=1``: several dd_ queries begin with the
-#: identical tokenize→shingle→explode→hot-cap stage, and a bench (or any
-#: batch driver running many dedup passes over one corpus snapshot) can
-#: legitimately build it once. Default OFF — per-query isolation stays
-#: the library behavior, and the external correctness gate never sets
-#: the flag, so every driver row still exercises the full cold pipeline.
-_SHINGLE_MEMO: dict = {}
-
-
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct k-word shingles per doc, hot shingles capped (Spark side).
 
@@ -89,84 +80,52 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades to disk instead of OOM. The hot-set anti-join stays *below*
     the cache: it is a map-side broadcast join, cheap to replay.
 
-    Cache lifecycle (round 11): the persist is on the INNER exploded
-    frame, and ``DataFrame.unpersist()`` does not cascade into a
-    subplan, so the returned anti-join frame carries the real handle as
-    ``_graft_inner_cache`` and ``session.finalize_unpersist`` releases
-    it. Convention by output grain: queries whose result is
-    result-sized (censuses, audits, budget-capped top-k) end in
-    ``finalize_unpersist(out, sh)`` and leave NO cached blocks behind;
-    queries emitting corpus-proportional pair lists return LAZY plans
-    that deliberately leave the cache (checkpointing a corpus-sized
-    result would cost more than the cache it frees) — those tag the
-    handle on their RESULT via ``session.tag_release(out, sh)`` so a
-    long-lived caller can free it with ``session.release_caches(result)``
-    after its last action (round 12). In shared-memo mode the frame is
-    untagged: the batch driver owns the snapshot, and both tag_release
-    and release_caches are no-ops on it.
+    Cache lifecycle: the persist is on the INNER exploded frame, and
+    ``DataFrame.unpersist()`` does not cascade into a subplan, so the
+    returned anti-join frame carries the real handle in its
+    ``_graft_release`` tag (``session.tag_release``). Convention by
+    output grain: queries whose result is result-sized (censuses,
+    audits, budget-capped top-k) end in ``finalize_unpersist(out, sh)``,
+    which releases the tag, and leave NO cached blocks behind; queries
+    emitting corpus-proportional pair lists return LAZY plans that
+    deliberately leave the cache (checkpointing a corpus-sized result
+    would cost more than the cache it frees) — those forward the tag to
+    their RESULT via ``session.tag_release(out, sh)`` so a long-lived
+    caller can free it with ``session.release_caches(result)`` after its
+    last action. Under a ``session.Snapshots`` store the stage is the
+    store's checkpoint instead: untagged, and released by no consumer.
     """
-    import os as _os
-
     from pyspark import StorageLevel
 
-    shared = _os.environ.get("SPARK_GRAFT_SHARED_SHINGLES") == "1"
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if shared and memo_key in _SHINGLE_MEMO:
-        out, inner = _SHINGLE_MEMO[memo_key]
-        lvl = inner.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            # self-heal (r12): a ``spark.catalog.clearCache()`` since the
-            # snapshot was built dropped its blocks AND its CacheManager
-            # registration, so the memoized frame had silently become a
-            # recompute-per-action plan (measured: every dd_-block bench
-            # query re-ran the whole tokenize→shingle chain whenever a
-            # pre-block consumer created the memo first). Re-registering
-            # the persist restores a live cache; blocks rebuild on the
-            # next action.
-            inner.persist(StorageLevel.MEMORY_AND_DISK)
-        return out
-
-    w = tokens()
-    shingle_arr = F.when(
-        F.size(w) >= SHINGLE_K,
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - SHINGLE_K),
-            lambda i: F.concat_ws(
-                " ", *[F.get(w, i + j) for j in range(SHINGLE_K)]
+    def build() -> DataFrame:
+        w = tokens()
+        shingle_arr = F.when(
+            F.size(w) >= SHINGLE_K,
+            F.transform(
+                F.sequence(F.lit(0), F.size(w) - SHINGLE_K),
+                lambda i: F.concat_ws(
+                    " ", *[F.get(w, i + j) for j in range(SHINGLE_K)]
+                ),
             ),
-        ),
-    )
-    # per-doc dedup happens INSIDE the array (array_distinct) before the
-    # explode — semantically identical to explode→DISTINCT but with zero
-    # shuffle: the whole shingle derivation is a narrow map stage
-    sh = (
-        read_table_parallel(spark, sf_dir, "documents", "doc_id")
-        .select("doc_id", F.explode(F.array_distinct(shingle_arr)).alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    hot = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_SHINGLE_DF)
-        .select("s")
-    )
-    out = sh.join(F.broadcast(hot), "s", "left_anti")
-    if shared:
-        # shared mode: the stage's lifecycle belongs to the batch driver
-        # (bench), so the frame is deliberately NOT tagged for release —
-        # a consumer's finalize_unpersist must leave the snapshot cached
-        # for its siblings. The inner handle is memoized alongside so a
-        # later hit can detect (and heal) a clearCache-dropped snapshot.
-        _SHINGLE_MEMO[memo_key] = (out, sh)
-    else:
-        # the persist above is on the INNER exploded frame, not on this
-        # anti-join output — DataFrame.unpersist() does NOT cascade to
-        # subplan caches (verified empirically: getPersistentRDDs keeps
-        # the block), so finalize_unpersist(.., shingles_output) was a
-        # silent no-op. Tag the real handle; finalize_unpersist releases
-        # it (round 11 — closes the r10 cache-leak advisory for real).
-        out._graft_inner_cache = sh
-    return out
+        )
+        # per-doc dedup happens INSIDE the array (array_distinct) before
+        # the explode — semantically identical to explode→DISTINCT but
+        # with zero shuffle: the whole shingle derivation is a narrow map
+        # stage
+        sh = (
+            read_table_parallel(spark, sf_dir, "documents", "doc_id")
+            .select("doc_id", F.explode(F.array_distinct(shingle_arr)).alias("s"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        hot = (
+            sh.groupBy("s")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > MAX_SHINGLE_DF)
+            .select("s")
+        )
+        return tag_release(sh.join(F.broadcast(hot), "s", "left_anti"), sh)
+
+    return snapshot(spark, sf_dir, "shingles", build)
 
 
 def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
@@ -662,8 +621,8 @@ def dd_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _exact_pairs(sh).select("d1", "d2").localCheckpoint()
     # the eager checkpoint above is the shingle cache's LAST reader —
     # release it here rather than leaving it to the caller (round 12;
-    # no-op in shared-memo mode, where the snapshot is untagged)
-    release_caches(tag_release(edges, sh))
+    # no-op on a stored snapshot, which is untagged)
+    release_caches(sh)
     sym = edges.unionByName(
         edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
     )

@@ -19,6 +19,7 @@ with one module owning every semantics-bearing config:
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import SparkSession
 
@@ -225,7 +226,9 @@ def finalize_unpersist(df, *cached):
     between queries). Checkpointing the *small* final vector breaks that
     lineage, after which the big intermediates can be dropped
     immediately; the caller holds only result-sized blocks, freed when
-    the DataFrame is garbage-collected.
+    the DataFrame is garbage-collected. Each ``cached`` frame releases
+    its own persist and every handle tagged on it (:func:`release_caches`
+    — ``DataFrame.unpersist()`` does not cascade into a subplan cache).
 
     ``SPARK_GRAFT_NO_CHECKPOINT=1`` returns the LAZY plan instead (no
     checkpoint, caches kept): the plan-audit tests set it so they can
@@ -233,46 +236,32 @@ def finalize_unpersist(df, *cached):
     lineage to a ``LogicalRDD`` scan and hide every join strategy from
     the audit. Never set it in production paths.
     """
-    import os
-
     if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT") == "1":
         return df
     out = df.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()
-        # DataFrame.unpersist() does NOT cascade to caches buried in the
-        # frame's subplan (a derived frame over an internal persist() is
-        # a silent no-op to unpersist — verified via getPersistentRDDs).
-        # Helpers that return such frames tag the real persisted handle;
-        # release it too (round 11).
-        inner = getattr(c, "_graft_inner_cache", None)
-        if inner is not None:
-            inner.unpersist()
+        release_caches(c)
     return out
 
 
 def tag_release(out, *caches):
-    """Attach the persisted handles backing a LAZY result to the result
-    itself, so the CALLER can free them once done (round 12).
+    """Tag the persisted handles backing a LAZY result on the result
+    itself as ``_graft_release``, so the CALLER can free them once done.
 
-    The other half of the cache-lifecycle convention documented on
-    :func:`operators.dedup.shingles`: result-sized queries end in
-    :func:`finalize_unpersist` (checkpoint + immediate release), but
-    pair-grain queries return corpus-proportional LAZY plans —
-    checkpointing those would materialize a result bigger than the cache
-    it frees, so the cache must outlive the query call. This tags every
-    real handle (a frame's own persist and/or the ``_graft_inner_cache``
-    a helper buried in its subplan) on the returned frame as
-    ``_graft_release``; after consuming the result, the caller calls
-    :func:`release_caches` on it. Shared-memo frames are untagged by
-    design (the batch driver owns the snapshot), so in shared mode
-    nothing is collected and a release is a safe no-op.
+    One tag carries every cache a frame is responsible for. A helper
+    whose persist sits inside the returned frame's subplan tags it there
+    (:func:`operators.dedup.shingles`); a pair-grain query returning a
+    corpus-proportional LAZY plan — checkpointing it would materialize a
+    result bigger than the cache it frees — forwards those tags plus any
+    persist of its own onto its result, and the caller calls
+    :func:`release_caches` after its last action. Snapshots served by a
+    :class:`Snapshots` store carry no tag and no CacheManager entry, so
+    nothing is collected from them.
     """
     handles = []
     for c in caches:
-        inner = getattr(c, "_graft_inner_cache", None)
-        if inner is not None:
-            handles.append(inner)
+        handles.extend(getattr(c, "_graft_release", ()))
         try:
             lvl = c.storageLevel
             if lvl.useMemory or lvl.useDisk:
@@ -285,15 +274,86 @@ def tag_release(out, *caches):
 
 
 def release_caches(df) -> None:
-    """Release the caches a pair-grain query left behind (round 12).
+    """Unpersist every handle tagged on ``df`` by :func:`tag_release`.
 
     Call AFTER the last action on ``df``: the frame is lazy, so dropping
     the cache earlier would force the next action to recompute the whole
-    shingle pipeline uncached. Idempotent; a no-op on untagged frames
-    (including everything produced under a shared-memo bench run, whose
-    snapshots the batch driver owns)."""
+    stage uncached. Idempotent; a no-op on untagged frames, including
+    every stored snapshot."""
     for h in getattr(df, "_graft_release", ()):
         h.unpersist()
+
+
+class Snapshots:
+    """Stages a batch driver builds once per corpus snapshot, keyed by
+    ``(sf_dir, stage)``.
+
+    Several query families open with the same derived stage: the
+    co-purchase edge list (``edges``), the label-propagation labels
+    (``lpa_labels``), the capped shingle set (``shingles``) and the
+    scaled IVF codebook (``codebook``). A batch driver running many
+    queries over one snapshot (``bench.py``, ``tools/time_query.py
+    --shared``) builds each of them once: creating a store installs it
+    on the session, and every :func:`snapshot` lookup on that session
+    goes through it until :meth:`close`.
+
+    A stage is built as an eager ``localCheckpoint`` — materialized,
+    lineage-free — after which the caches the build tagged on its frame
+    are released. A local checkpoint is not registered in the
+    CacheManager, so neither ``spark.catalog.clearCache()`` nor a
+    consumer's :func:`finalize_unpersist` / :func:`release_caches` can
+    drop it: the store owns it. ``builds`` records ``(sf_dir, stage,
+    seconds)`` for every build, so a driver reports the shared work
+    separately from the queries that read it.
+    """
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._frames: dict = {}
+        self.builds: list[tuple[str, str, float]] = []
+        spark._graft_snapshots = self
+
+    def __enter__(self) -> "Snapshots":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def close(self) -> None:
+        """Uninstall from the session and drop every stored stage."""
+        if getattr(self._spark, "_graft_snapshots", None) is self:
+            del self._spark._graft_snapshots
+        self._frames.clear()
+
+    def get(self, sf_dir: str, stage: str, build, fresh: bool = False):
+        key = (sf_dir, stage)
+        if fresh or key not in self._frames:
+            t0 = time.perf_counter()
+            frame = build()
+            self._frames[key] = frame.localCheckpoint(eager=True)
+            release_caches(frame)
+            self.builds.append((sf_dir, stage, time.perf_counter() - t0))
+        return self._frames[key]
+
+    def build_seconds(self, sf_dir: str, stage: str) -> float | None:
+        """Total seconds spent building ``stage`` (None if never built)."""
+        secs = [t for d, s, t in self.builds if (d, s) == (sf_dir, stage)]
+        return round(sum(secs), 3) if secs else None
+
+
+def snapshot(spark: SparkSession, sf_dir: str, stage: str, build, fresh: bool = False):
+    """The stored ``stage`` of ``sf_dir`` when a :class:`Snapshots` store
+    is installed on ``spark`` (built on first use), else ``build()``
+    untouched — the library default and every correctness run, so a
+    query's cold plan and jobs never depend on a store.
+
+    ``fresh=True`` builds even when the stage is stored and replaces it:
+    a query whose own work IS the stage (label propagation) computes it
+    on every call and publishes the result to later readers."""
+    store = getattr(spark, "_graft_snapshots", None)
+    if store is None:
+        return build()
+    return store.get(sf_dir, stage, build, fresh)
 
 
 def read_table_parallel(spark: SparkSession, sf_dir: str, name: str, key: str):

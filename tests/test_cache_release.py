@@ -4,13 +4,14 @@
 ``finalize_unpersist(out, shingles(...))`` was a silent no-op for nine
 rounds: the inner exploded-shingle block stayed persisted after every
 "released" query. :func:`operators.dedup.shingles` now tags the real
-persisted handle on its returned frame (``_graft_inner_cache``) and
+persisted handle on its returned frame (``_graft_release``) and
 ``session.finalize_unpersist`` cascades to it. These tests pin:
 
 * result-sized shingle consumers leave NO corpus-sized cached blocks
   behind (only their own 1-partition result checkpoint may remain);
-* in shared-memo mode the frame is untagged, so a consumer's finalize
-  must LEAVE the snapshot cached for its siblings (the bench contract).
+* under a ``session.Snapshots`` store the stage is the store's untagged
+  checkpoint, so a consumer's finalize or release must LEAVE it
+  materialized for its siblings (the bench contract).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import pytest
 
 from python_sql_etl_project_spark import registry
 from python_sql_etl_project_spark.operators import dedup
+from python_sql_etl_project_spark.session import Snapshots
 
 SF = "/root/testdata/sf0.001"
 
@@ -66,13 +68,11 @@ def test_result_sized_consumers_release_shingle_cache(spark, name):
     )
 
 
-def test_shared_memo_frame_is_not_released(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
+def test_shared_memo_frame_is_not_released(spark):
     spark.catalog.clearCache()
-    dedup._SHINGLE_MEMO.clear()
-    try:
+    with Snapshots(spark):
         sh = dedup.shingles(spark, SF)
-        assert not hasattr(sh, "_graft_inner_cache")
+        assert not hasattr(sh, "_graft_release")
         sh.count()
         cached_before = {
             rid for rid, p in _persistent_rdds(spark).items() if p > 1
@@ -85,9 +85,7 @@ def test_shared_memo_frame_is_not_released(spark, monkeypatch):
         }
         # ...and must leave it cached for siblings
         assert cached_before <= cached_after
-    finally:
-        dedup._SHINGLE_MEMO.clear()
-        spark.catalog.clearCache()
+    spark.catalog.clearCache()
 
 
 #: every pair-/batch-grain query returning a LAZY frame over a persisted
@@ -124,24 +122,28 @@ def test_pair_grain_query_supports_caller_managed_release(spark, name):
     assert _cache_manager_empty(spark)
 
 
-def test_release_is_noop_on_shared_memo_snapshot(spark, monkeypatch):
-    """In shared-memo mode the snapshot belongs to the batch driver:
-    the pair-grain result carries no release tag, so a caller's
-    release_caches must leave the snapshot cached for siblings."""
+def test_release_is_noop_on_shared_memo_snapshot(spark):
+    """Under a Snapshots store the shingle stage belongs to the batch
+    driver: the pair-grain result carries no release tag, so a caller's
+    release_caches must leave the snapshot materialized for siblings.
+    The snapshot is a local checkpoint, which persists its RDD outside
+    the CacheManager, so "still cached" is read from the persisted RDDs
+    rather than from the CacheManager."""
     from python_sql_etl_project_spark.session import release_caches
 
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
     spark.catalog.clearCache()
-    dedup._SHINGLE_MEMO.clear()
-    try:
+    with Snapshots(spark):
+        snap = {rid for rid, p in _persistent_rdds(spark).items() if p > 1}
         out = registry.QUERIES["dd_shingle_jaccard_pairs"](spark, SF)
         out.count()
-        assert not _cache_manager_empty(spark)
+        snap = {
+            rid for rid, p in _persistent_rdds(spark).items() if p > 1
+        } - snap
+        assert snap, "shared stage should be persisted"
+        assert not hasattr(out, "_graft_release")
         release_caches(out)
-        assert not _cache_manager_empty(spark)
-    finally:
-        dedup._SHINGLE_MEMO.clear()
-        spark.catalog.clearCache()
+        assert snap <= set(_persistent_rdds(spark))
+    spark.catalog.clearCache()
 
 
 def test_cc_clusters_release_shingles_after_edge_checkpoint(spark):

@@ -1052,7 +1052,7 @@ def test_lpa_packing_precondition_enforced(spark):
 
     bad = spark.createDataFrame([(-1, 2), (2, -1)], "src bigint, dst bigint")
     with pytest.raises(Exception, match="negative node id"):
-        _lpa_labels(spark, "synthetic", bad, reuse=False).collect()
+        _lpa_labels(spark, "synthetic", bad, fresh=True).collect()
 
     lo = _copurchase_pairs(spark, SF).agg(
         F.min("src").alias("lo_s"), F.min("dst").alias("lo_d")
@@ -1789,7 +1789,7 @@ def test_residual_ivfpq_sound_and_lower_distortion(spark):
     cents = {
         r["cell"]: np.array(r["centroid"])
         for r in sim._scaled_codebook(
-            read_table(spark, SF, "embeddings")
+            read_table(spark, SF, "embeddings"), spark, SF
         ).collect()
     }
     C = np.stack([cents[k] for k in sorted(cents)])

@@ -333,7 +333,7 @@ def test_lpa_rounds_stay_hashaggregate_single_exchange(spark, monkeypatch):
         _CDF, "localCheckpoint", lambda self, *a, **k: self
     )
     pairs = g._copurchase_pairs(spark, SF_DIR)
-    labels = g._lpa_labels(spark, "plan-audit", pairs, reuse=False)
+    labels = g._lpa_labels(spark, "plan-audit", pairs, fresh=True)
     plan = labels._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan, plan[:3000]
     assert plan.count("HashAggregate") >= 4 * g.LPA_ROUNDS  # 2 aggs × (partial+final)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_sql_etl_project_spark.load.incremental import Warehouse
@@ -545,24 +546,40 @@ def test_decode_image_via_pillow():
     assert decode_image(buf.getvalue()) == (3, 2)
 
 
-def test_shared_shingle_stage_parity(spark, monkeypatch):
-    """SPARK_GRAFT_SHARED_SHINGLES=1 memoizes the shingle stage per
-    (session, sf_dir) — results must be identical to the cold path and
-    the second call must reuse the exact same DataFrame object."""
-    from python_sql_etl_project_spark.operators import dedup
+@pytest.mark.parametrize(
+    "stage,consumer",
+    [
+        ("edges", "graph_multi_source_bfs"),
+        ("lpa_labels", "graph_modularity"),
+        ("shingles", "dd_shingle_jaccard_pairs"),
+        ("codebook", "sim_ivfpq_search"),
+    ],
+    ids=["edges", "lpa_labels", "shingles", "codebook"],
+)
+def test_shared_stage_parity(spark, stage, consumer):
+    """A Snapshots store serves each shared stage per (sf_dir, stage) —
+    a consumer's results must be identical to the cold path, the stage
+    is built once across two calls, and every later lookup returns the
+    exact same DataFrame object."""
+    from python_sql_etl_project_spark import registry
+    from python_sql_etl_project_spark.session import Snapshots, snapshot
 
-    cold = dedup.dd_shingle_jaccard_pairs(spark, SF_DIR).collect()
+    registry.load_all()
+    fn = registry.QUERIES[consumer]
 
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
-    dedup._SHINGLE_MEMO.clear()
-    try:
-        warm1 = dedup.shingles(spark, SF_DIR)
-        warm2 = dedup.shingles(spark, SF_DIR)
+    def no_build():
+        raise AssertionError(f"{stage} rebuilt")
+
+    cold = fn(spark, SF_DIR).collect()
+    with Snapshots(spark) as store:
+        shared = fn(spark, SF_DIR).collect()
+        again = fn(spark, SF_DIR).collect()
+        warm1 = snapshot(spark, SF_DIR, stage, no_build)
+        warm2 = snapshot(spark, SF_DIR, stage, no_build)
         assert warm1 is warm2
-        shared = dedup.dd_shingle_jaccard_pairs(spark, SF_DIR).collect()
-    finally:
-        dedup._SHINGLE_MEMO.clear()
+        assert [s for _, s, _ in store.builds].count(stage) == 1
     assert sorted(map(tuple, cold)) == sorted(map(tuple, shared))
+    assert sorted(map(tuple, cold)) == sorted(map(tuple, again))
 
 
 def test_compact_parquet_reduces_files_losslessly(spark, tmp_path):

@@ -22,7 +22,7 @@ REPRESENTATIVES = ",".join(
         "strm_session_windows",  # streaming + ts-encoding detection
         "mm_feature_extract",  # pandas-UDF package shipping
         "sim_knn_pandas_udf",  # arrow batch UDF path
-        "dd_minhash_lsh_pairs",  # shared-shingle flag must default off
+        "dd_minhash_lsh_pairs",  # cold shingle stage: no snapshot store
         "jn_bucketed_colocated_revenue",  # metastore/warehouse handling
         "strm_scd2_foreachbatch",  # landing-file mtime ordering + foreachBatch
         "ld_compact_small_files",  # Hadoop FS listing + tempdir writes
@@ -33,7 +33,6 @@ REPRESENTATIVES = ",".join(
 @pytest.mark.slow
 def test_vanilla_session_contract():
     env = dict(os.environ)
-    env.pop("SPARK_GRAFT_SHARED_SHINGLES", None)
     env["ONLY"] = REPRESENTATIVES
     env["SF_DIR"] = "/root/testdata/sf0.001"
     proc = subprocess.run(

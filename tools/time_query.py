@@ -25,20 +25,16 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("-n", "--repeats", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--shared", action="store_true", help="set the bench shared-stage env flags")
+    ap.add_argument("--shared", action="store_true", help="install the bench's snapshot store")
     args = ap.parse_args()
 
-    if args.shared:
-        os.environ["SPARK_GRAFT_SHARED_SHINGLES"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_LPA"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_EDGES"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_CODEBOOK"] = "1"
-
     from python_sql_etl_project_spark import registry
-    from python_sql_etl_project_spark.session import build_spark
+    from python_sql_etl_project_spark.session import Snapshots, build_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = build_spark(app_name="time_query", master=f"local[{cpus}]")
+    if args.shared:
+        Snapshots(spark)  # installs itself on the session
     queries = registry.all_queries()
 
     # warm-up: JVM/codegen/parquet footers + Python worker pool (both
