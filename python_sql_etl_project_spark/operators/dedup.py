@@ -35,6 +35,7 @@ from ..session import (
     tag_release,
 )
 from . import text
+from .graph import fixpoint, min_step
 from .text import tokens
 
 SHINGLE_K = 3
@@ -602,13 +603,14 @@ def dd_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         label(v) ← min(label(v), min over neighbors(label(u)))
 
-    repeated to fixpoint (driver loop; converges in O(component
-    diameter) rounds — dup clusters are shallow, and
-    ``MAX_CC_ITERATIONS`` is a safety rail, not the expected count).
-    Each round is one shuffle join; lineage is truncated with
-    ``localCheckpoint`` so the plan doesn't grow unboundedly — the
-    standard Spark large-graph CC pattern. The convergence check is a
-    scalar ``count()`` per round, the one permissible driver-side value.
+    repeated to fixpoint (``graph.fixpoint`` over ``graph.min_step`` on
+    the symmetric pair list; converges in O(component diameter) rounds
+    — dup clusters are shallow, and ``MAX_CC_ITERATIONS`` is a safety
+    rail, not the expected count). Each round is one shuffle join;
+    lineage is truncated with ``localCheckpoint`` so the plan doesn't
+    grow unboundedly — the standard Spark large-graph CC pattern. The
+    convergence check is a scalar ``count()`` per round, the one
+    permissible driver-side value.
     Output: every doc in a duplicate cluster, its cluster id (= min
     doc_id in the component, the canonical survivor) and cluster size.
     The oracle computes the same components with a recursive CTE.
@@ -625,57 +627,21 @@ def dd_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_caches(sh)
     sym = edges.unionByName(
         edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    )
-    labels = (
-        sym.select(F.col("d1").alias("doc_id"))
+    ).toDF("src", "dst")
+    seed = (
+        sym.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
+        .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    neigh = sym.select(F.col("d1").alias("doc_id"), F.col("d2").alias("nb"))
-    for _ in range(MAX_CC_ITERATIONS):
-        # r12 round shape (see graph_connected_components): self rows +
-        # neighbor contributions in ONE min() aggregation, previous
-        # label folded in as min(label WHERE is_self) — replaces the
-        # LEFT join per round; the convergence count reads the
-        # checkpointed blocks as before.
-        # PRECONDITION (ADVICE r12): the edge list must be symmetric so
-        # every neighbor is in the label vector — `sym` above unions
-        # both directions explicitly.
-        contrib = neigh.join(
-            labels.select(
-                F.col("doc_id").alias("nb"), F.col("label").alias("nb_label")
-            ),
-            "nb",
-        ).select(
-            "doc_id",
-            F.col("nb_label").alias("label"),
-            F.lit(False).alias("is_self"),
-        )
-        upd = (
-            labels.select("doc_id", "label", F.lit(True).alias("is_self"))
-            .unionByName(contrib)
-            .groupBy("doc_id")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias("old"),
-            )
-            .select(
-                "doc_id",
-                "label",
-                (F.col("label") < F.col("old")).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = upd.filter("changed").count()
-        labels = upd.select("doc_id", "label")
-        if changed == 0:
-            break
+    labels = fixpoint(seed, lambda v: min_step(sym, v), MAX_CC_ITERATIONS)
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
     return labels.join(sizes, "label").select(
-        "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        "cluster_size",
     )
 
 

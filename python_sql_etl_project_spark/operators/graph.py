@@ -20,6 +20,8 @@ irrelevant for ranking use.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1058,15 +1060,76 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
+def min_step(edges: DataFrame, vec: DataFrame, hop: int = 0) -> DataFrame:
+    """One round of min propagation: every node takes the minimum of its
+    own label and ``label + hop`` over its in-neighbours.
+
+    ``edges(src, dst)`` carries messages src → dst; ``vec(node, label)``
+    is the current vector. Self rows and neighbour contributions union
+    into ONE map-side-combinable ``min()`` aggregate, and the previous
+    label rides along in the same HashAggregate as ``old = min(label
+    WHERE is_self)``, so a round is one edge-probe join plus one
+    aggregate, with no LEFT join back onto the vector and no join to
+    count changes (A/B at sf0.1, warm, min-of-3: 0.892 → 0.625 s per CC
+    round against the LEFT-join shape). Returns a lazy ``(node, label,
+    old)``; ``old`` is NULL for a node with no self row (a dst not yet in
+    ``vec``), which :func:`fixpoint` counts as changed.
+    """
+    label = F.col("label") + hop if hop else F.col("label")
+    contrib = edges.join(
+        vec.select(F.col("node").alias("src"), "label"), "src"
+    ).select(
+        F.col("dst").alias("node"),
+        label.alias("label"),
+        F.lit(False).alias("is_self"),
+    )
+    return (
+        vec.select("node", "label", F.lit(True).alias("is_self"))
+        .unionByName(contrib)
+        .groupBy("node")
+        .agg(
+            F.min("label").alias("label"),
+            F.min(F.when(F.col("is_self"), F.col("label"))).alias("old"),
+        )
+    )
+
+
+def fixpoint(
+    vec: DataFrame, step: Callable[[DataFrame], DataFrame], rounds: int
+) -> DataFrame:
+    """Run ``step`` from ``vec(node, label)`` until a round changes no
+    label, or for at most ``rounds`` rounds; return ``(node, label)``.
+
+    ``step`` maps ``(node, label)`` to ``(node, label, old)``, as
+    :func:`min_step` does. Each round is checkpointed eagerly with
+    ``localCheckpoint`` (truncating the iterative lineage) and its
+    changed rows, ``coalesce(label < old, true)``, are counted over the
+    checkpointed blocks. Labels only ever decrease and ``min`` is
+    idempotent, so a round that changes nothing is a fixed point and
+    every later round would be the identity: the early exit returns
+    exactly what running all ``rounds`` would. A node with no previous
+    label (``old`` NULL, e.g. a dst-only node of an asymmetric edge list,
+    or a node reached for the first time) counts as changed, so the loop
+    never stops while such a node is still arriving.
+    """
+    changed = F.coalesce(F.col("label") < F.col("old"), F.lit(True))
+    for _ in range(rounds):
+        nxt = step(vec).localCheckpoint()
+        vec = nxt.select("node", "label")
+        if nxt.filter(changed).count() == 0:
+            break
+    return vec
+
+
 #: Min-label-propagation rounds for connected components. Each round
 #: moves a minimum id ONE hop (the halving claim belongs to the
 #: pointer-doubling large-star/small-star variant, not this plain
 #: propagation), so convergence needs ~diameter rounds; the co-purchase
 #: graph's observed diameter is small (BFS_MAX_DEPTH=4 reaches the whole
 #: main component) and the invariant test proves convergence at the
-#: tested SFs by running one extra round. A production run on an
-#: unknown graph would loop to fixed point (the k-core pattern) or
-#: switch to pointer doubling for log-diameter rounds.
+#: tested SFs by running one extra round. :func:`fixpoint` stops at the
+#: fixed point or at this cap; an unknown graph of larger diameter
+#: needs a higher cap or pointer doubling for log-diameter rounds.
 CC_ROUNDS = 5
 
 
@@ -1106,65 +1169,27 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "which nodes are in the same component".
 
     Determinism: label updates are pure min() — order-free and
-    idempotent — and both engines run EXACTLY {CC_ROUNDS} synchronous
-    rounds, so results are identical by construction even
-    mid-convergence; the invariant test proves convergence at the
-    tested SFs by checking one extra round is the identity.
+    idempotent. The oracle runs EXACTLY {CC_ROUNDS} synchronous rounds;
+    Spark runs :func:`min_step` under :func:`fixpoint` with the same
+    cap and stops early only at a fixed point, so results are identical
+    by construction even mid-convergence; the invariant test proves
+    convergence at the tested SFs by checking one extra round is the
+    identity.
 
     Scale shape: per round ONE shuffle — the |V|-row label vector joins
-    the cached edge list, ``min`` per dst is map-side-combinable, and
-    the early exit (labels only ever DECREASE, so an unchanged-row
-    count of zero means a fixed point and every later round is the
-    identity) is exactly equivalent to running all rounds.
+    the cached edge list and ``min`` per dst is map-side-combinable;
     ``localCheckpoint`` per round truncates lineage — the same
     Pregel-as-joins shape as PageRank/LPA; at 1000 executors each
     round is a single co-partitioned shuffle on node id.
     """
     pairs = _copurchase_pairs(spark, sf_dir).persist()
-    labels = (
+    seed = (
         pairs.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(CC_ROUNDS):
-        # r12 round shape: ONE aggregation, ZERO joins besides the edge
-        # probe. The old round built min-of-neighbors as a separate
-        # aggregate, LEFT-joined it back onto the label vector, and then
-        # ran a THIRD join (nxt ⋈ labels) just to count changed rows.
-        # Self-rows and neighbor contributions union into one
-        # map-side-combinable min() instead (the multi-source-BFS round
-        # shape), the previous label rides along as min(label WHERE
-        # is_self) in the SAME HashAggregate, and the convergence count
-        # reads the checkpointed blocks. A/B at sf0.1 (warm, min-of-3):
-        # 0.892 s/round → 0.625 s/round.
-        # PRECONDITION (ADVICE r12): the edge list must be SYMMETRIC —
-        # every dst also appears as src (true for _copurchase_pairs by
-        # construction). An asymmetric list would inject dst-only nodes
-        # with old=NULL: excluded from the changed count (false early
-        # exit) yet present in the output.
-        contrib = pairs.join(
-            labels.select(F.col("node").alias("src"), "label"), "src"
-        ).select(
-            F.col("dst").alias("node"), "label", F.lit(False).alias("is_self")
-        )
-        nxt = (
-            labels.select("node", "label", F.lit(True).alias("is_self"))
-            .unionByName(contrib)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias("old"),
-            )
-            .select(
-                "node", "label", (F.col("label") < F.col("old")).alias("changed")
-            )
-            .localCheckpoint()
-        )
-        n_changed = nxt.filter("changed").count()
-        labels = nxt.select("node", "label")
-        if n_changed == 0:
-            break
+    labels = fixpoint(seed, lambda v: min_step(pairs, v), CC_ROUNDS)
     out = labels.groupBy(F.col("label").alias("component")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
@@ -1199,6 +1224,16 @@ def _cc_pd_round_sql(prev: str, this: str) -> str:
     )"""
 
 
+def _pd_step(edges: DataFrame, vec: DataFrame) -> DataFrame:
+    """One pointer-doubling round: :func:`min_step`'s one-hop minimum,
+    then the jump label := label[label]. The jump reads round-(k−1)
+    state, so it joins the vector on the PREVIOUS label ``old``."""
+    jump = vec.select(F.col("node").alias("old"), F.col("label").alias("jlabel"))
+    return min_step(edges, vec).join(jump, "old").select(
+        "node", F.least("label", "jlabel").alias("label"), "old"
+    )
+
+
 @query(
     "graph_cc_pointer_doubling",
     oracle=f"""
@@ -1229,65 +1264,21 @@ def graph_cc_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of execution order; the jump join is total because
     labels only ever hold node ids that exist in the label vector.
 
-    Scale shape: per round TWO co-partitioned shuffles — the label
-    vector against the cached edge list (map-side-combined min per
-    dst), and the label vector against itself on ``label`` (the jump).
-    Labels only decrease, so the early exit (zero changed rows) is
-    equivalent to running all rounds; ``localCheckpoint`` truncates the
-    iterative lineage exactly as the other Pregel-as-joins operators.
+    Scale shape: per round TWO co-partitioned shuffles — the
+    :func:`min_step` aggregate over the cached edge list (map-side-
+    combined min per dst), and its result against the label vector on
+    the previous label (the jump). :func:`fixpoint` runs at most
+    {CC_PD_ROUNDS} rounds and stops at a fixed point, checkpointing each
+    round exactly as the other Pregel-as-joins operators.
     """
     pairs = _copurchase_pairs(spark, sf_dir).persist()
-    labels = (
+    seed = (
         pairs.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(CC_PD_ROUNDS):
-        # r12 round shape (see graph_connected_components): the one-hop
-        # minimum folds self + neighbor contributions into ONE
-        # aggregation carrying the previous label as min(label WHERE
-        # is_self); the pointer jump is then a single equi-join of that
-        # |V|-row aggregate against the label vector on the PREVIOUS
-        # label (label := label[label] reads round-(k−1) state, so the
-        # jump must use `old`, exactly as before where `jump` joined the
-        # pre-update vector). The old shape ran a LEFT join + the jump
-        # join + a third count join; this runs the jump join only, and
-        # the convergence count reads checkpointed blocks.
-        # PRECONDITION (ADVICE r12): pairs must be symmetric so every
-        # dst is in the label vector (holds for _copurchase_pairs).
-        contrib = pairs.join(
-            labels.select(F.col("node").alias("src"), "label"), "src"
-        ).select(
-            F.col("dst").alias("node"), "label", F.lit(False).alias("is_self")
-        )
-        hop = (
-            labels.select("node", "label", F.lit(True).alias("is_self"))
-            .unionByName(contrib)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("m"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias("old"),
-            )
-        )
-        jump = labels.select(
-            F.col("node").alias("old"), F.col("label").alias("jlabel")
-        )
-        nxt = (
-            hop.join(jump, "old")
-            .select(
-                "node",
-                F.least(F.col("m"), F.col("jlabel")).alias("label"),
-                (
-                    F.least(F.col("m"), F.col("jlabel")) < F.col("old")
-                ).alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = nxt.filter("changed").count()
-        labels = nxt.select("node", "label")
-        if n_changed == 0:
-            break
+    labels = fixpoint(seed, lambda v: _pd_step(pairs, v), CC_PD_ROUNDS)
     out = labels.groupBy(F.col("label").alias("component")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
@@ -1300,8 +1291,8 @@ def graph_cc_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Multi-source BFS: seed count and synchronous round count. The
 #: co-purchase graph's observed diameter is ≤ 4 from the hub seeds at
 #: every tested SF (the CC notes' BFS_MAX_DEPTH observation), so 4
-#: rounds label every reachable node; a production run on an unknown
-#: graph loops to fixed point exactly like CC.
+#: rounds label every reachable node; :func:`fixpoint` stops earlier
+#: once a round changes nothing.
 BFS_SEEDS = 3
 BFS_ROUNDS = 4
 
@@ -1342,37 +1333,32 @@ def graph_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the catalog is 1, 2, 3 hops from the hubs — the 'blast radius'
     number a merchandising or recall-propagation analysis starts from).
     Frontier expansion is the same synchronous Pregel-as-joins shape as
-    `graph_connected_components` with ``min(dist)`` instead of
-    ``min(label)``: both engines run exactly {BFS_ROUNDS} rounds, and
-    since distances only ever decrease and the observed hub
-    eccentricity is ≤ {BFS_ROUNDS}, the fixed-round result IS the BFS
-    fixed point at the tested SFs (mid-convergence it is still
-    well-defined and identical cross-engine by construction).
+    `graph_connected_components` with ``min(dist + 1)`` instead of
+    ``min(label)`` (:func:`min_step` with ``hop=1``). The oracle runs
+    exactly {BFS_ROUNDS} rounds; Spark stops at its fixed point — the
+    first round that neither reaches a new node nor shortens a
+    distance — or after {BFS_ROUNDS} rounds. Distances only ever
+    decrease, so both give the same census (the invariant test checks
+    it against one extra round); the observed hub eccentricity is
+    ≤ {BFS_ROUNDS}, so the capped result IS the BFS fixed point at the
+    tested SFs.
 
     Scale shape: seed pick is a dim-grain top-k on the degree census;
     each round is ONE co-partitioned shuffle (reached-vector ⋈ cached
-    edges, min per dst map-side-combinable); ``localCheckpoint`` per
-    round truncates the iterative lineage. The reached vector is
-    |V|-bounded — never edge- or fact-scale.
+    edges, min per dst map-side-combinable), checkpointed by
+    :func:`fixpoint` to truncate the iterative lineage. The reached
+    vector is |V|-bounded — never edge- or fact-scale.
     """
     pairs = _copurchase_pairs(spark, sf_dir).persist()
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = deg.orderBy(F.desc("deg"), "src").limit(BFS_SEEDS)
-    dist = seeds.select(
-        F.col("src").alias("node"), F.lit(0).alias("dist")
-    ).localCheckpoint()
-    for _ in range(BFS_ROUNDS):
-        reached = (
-            pairs.join(dist.select(F.col("node").alias("src"), "dist"), "src")
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-    out = dist.groupBy(F.col("dist").alias("distance")).agg(
+    seed = (
+        deg.orderBy(F.desc("deg"), "src")
+        .limit(BFS_SEEDS)
+        .select(F.col("src").alias("node"), F.lit(0).alias("label"))
+        .localCheckpoint()
+    )
+    dist = fixpoint(seed, lambda v: min_step(pairs, v, hop=1), BFS_ROUNDS)
+    out = dist.groupBy(F.col("label").alias("distance")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_part_key"),
     )

@@ -21,12 +21,14 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..session import read_table_parallel
+from ..session import finalize_unpersist, read_table_parallel
+from .graph import fixpoint, min_step
 
 MIMES = ("image/png", "image/jpeg", "audio/wav", "video/mp4")
 FRAME_STEP = 5  # sample every 5th frame
@@ -1024,10 +1026,11 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-node mass by construction, at every scale).
 
     Determinism: the pair stage is the registered pairs query verbatim
-    (one shared definition both engines); label updates are pure min
-    over exactly {MM_CC_ROUNDS} synchronous rounds (converged with
-    headroom at the tested SFs — the invariant test runs one extra
-    round and asserts identity).
+    (one shared definition both engines); label updates are pure min.
+    The oracle runs exactly {MM_CC_ROUNDS} synchronous rounds; Spark
+    runs ``graph.min_step`` under ``graph.fixpoint`` with the same cap
+    and stops early only at a fixed point, which returns exactly what
+    the remaining rounds would (near-dup chains are shallow).
 
     Scale shape: pair generation stays nibble-blocked (never corpus²),
     and the pair GRAPH is edge-budgeted per asset (``MM_PAIR_BUDGET``
@@ -1038,8 +1041,6 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining that bounded pair list — the same Pregel-as-joins shape as
     `graph_connected_components`, on a far smaller graph.
     """
-    from pyspark import StorageLevel
-
     ranked = (
         mm_phash_neardup_pairs(spark, sf_dir)
         .withColumn(
@@ -1064,44 +1065,14 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # label seed from the UNCAPPED pair node set (see docstring): nodes
     # orphaned by the edge budget survive as singleton clusters
-    labels = (
+    seed = (
         ranked.select(F.col("a1").alias("node"))
         .unionByName(ranked.select(F.col("a2").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(MM_CC_ROUNDS):
-        # r12 round shape (see graph_connected_components): self rows +
-        # neighbor contributions in ONE min() aggregation, previous
-        # label folded in as min(label WHERE is_self), convergence count
-        # read from the checkpointed blocks — replaces a LEFT join and a
-        # separate count join per round.
-        # PRECONDITION (ADVICE r12): every edge dst must be in the label
-        # vector — `edges` is symmetric (both directions unioned above)
-        # and the seed unions both endpoint columns of the uncapped set.
-        contrib = edges.join(
-            labels.select(F.col("node").alias("src"), "label"), "src"
-        ).select(
-            F.col("dst").alias("node"), "label", F.lit(False).alias("is_self")
-        )
-        nxt = (
-            labels.select("node", "label", F.lit(True).alias("is_self"))
-            .unionByName(contrib)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias("old"),
-            )
-            .select(
-                "node", "label", (F.col("label") < F.col("old")).alias("changed")
-            )
-            .localCheckpoint()
-        )
-        n_changed = nxt.filter("changed").count()
-        labels = nxt.select("node", "label")
-        if n_changed == 0:
-            break
+    labels = fixpoint(seed, lambda v: min_step(edges, v), MM_CC_ROUNDS)
     out = (
         labels.groupBy(F.col("label").alias("cluster_id"))
         .agg(
@@ -1112,8 +1083,6 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded-BNLJ pattern; allowlisted in the plan audit)
         .crossJoin(F.broadcast(trunc))
     )
-    from ..session import finalize_unpersist
-
     res = finalize_unpersist(out)
     edges.unpersist()
     ranked.unpersist()
