@@ -26,14 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import (
-    finalize_unpersist,
-    read_table,
-    read_table_parallel,
-    release_caches,
-    snapshot,
-    tag_release,
-)
+from ..session import finalize_unpersist, read_table, read_table_parallel, snapshot
 from . import text
 from .graph import fixpoint, min_step
 from .text import tokens
@@ -73,28 +66,22 @@ _SHINGLES_CTE = f"""
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct k-word shingles per doc, hot shingles capped (Spark side).
 
-    The exploded-distinct shingle set is ``persist()``-ed: it feeds the
-    hot-shingle census AND every downstream consumer (signature agg, doc
-    lengths, both sides of the verify join); without the cache Spark
-    recomputes the tokenize→explode→distinct chain once per consumer —
-    measured 3× slower at sf0.1. MEMORY_AND_DISK so a 1000-executor run
-    degrades to disk instead of OOM. The hot-set anti-join stays *below*
-    the cache: it is a map-side broadcast join, cheap to replay.
+    The exploded-distinct shingle set is ``persist()``-ed: it feeds both
+    the hot-shingle census and the hot-set anti-join, and uncached the
+    tokenize→explode chain would run once per reader. MEMORY_AND_DISK so
+    a 1000-executor run degrades to disk instead of OOM.
 
-    Cache lifecycle: the persist is on the INNER exploded frame, and
-    ``DataFrame.unpersist()`` does not cascade into a subplan, so the
-    returned anti-join frame carries the real handle in its
-    ``_graft_release`` tag (``session.tag_release``). Convention by
-    output grain: queries whose result is result-sized (censuses,
-    audits, budget-capped top-k) end in ``finalize_unpersist(out, sh)``,
-    which releases the tag, and leave NO cached blocks behind; queries
-    emitting corpus-proportional pair lists return LAZY plans that
-    deliberately leave the cache (checkpointing a corpus-sized result
-    would cost more than the cache it frees) — those forward the tag to
-    their RESULT via ``session.tag_release(out, sh)`` so a long-lived
-    caller can free it with ``session.release_caches(result)`` after its
-    last action. Under a ``session.Snapshots`` store the stage is the
-    store's checkpoint instead: untagged, and released by no consumer.
+    Cache lifecycle: the build follows the rule of
+    :func:`session.finalize_unpersist`. Its last step checkpoints the
+    hot-capped set eagerly and drops the explode persist, so every
+    consumer (signature agg, doc lengths, both sides of the verify join)
+    reads materialized shingles (recomputing the chain per consumer
+    measured 3× slower at sf0.1) and, with or without a
+    ``session.Snapshots`` store, gets a lineage-free frame outside the
+    CacheManager that it has nothing to release. The checkpoint's blocks
+    are freed when the frame is garbage-collected, not at an explicit
+    ``unpersist``. ``SPARK_GRAFT_NO_CHECKPOINT`` returns the lazy build
+    instead, so the plan audit still sees it.
     """
     from pyspark import StorageLevel
 
@@ -124,7 +111,7 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("df") > MAX_SHINGLE_DF)
             .select("s")
         )
-        return tag_release(sh.join(F.broadcast(hot), "s", "left_anti"), sh)
+        return finalize_unpersist(sh.join(F.broadcast(hot), "s", "left_anti"), sh)
 
     return snapshot(spark, sf_dir, "shingles", build)
 
@@ -245,12 +232,8 @@ def dd_shingle_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys are shingles and pairs, never a cross join. Emission is bounded
     by ``PAIR_EMIT_BUDGET`` per anchor doc with an ``overflow`` counter
     (the per-doc window runs over qualifying pairs only — per-key size is
-    clique-bounded, never corpus-bounded).
-
-    Pair-grain output → lazy, shingle cache stays live; the caller frees
-    it with :func:`session.release_caches` when done (round 12)."""
-    sh = shingles(spark, sf_dir)
-    return tag_release(_budget_pairs(_exact_pairs_scored(sh)), sh)
+    clique-bounded, never corpus-bounded)."""
+    return _budget_pairs(_exact_pairs_scored(shingles(spark, sf_dir)))
 
 
 def _budget_pairs(scored: DataFrame) -> DataFrame:
@@ -377,11 +360,7 @@ def dd_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sh = shingles(spark, sf_dir)
     cand = _minhash_candidates(sh)
-    out = _verify_jaccard(cand, sh).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
-    # pair-grain → lazy; caller releases via session.release_caches
-    return tag_release(out, sh)
+    return _verify_jaccard(cand, sh).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 def _band_frame(sh: DataFrame) -> DataFrame:
@@ -621,10 +600,6 @@ def dd_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1). The edge list is the small output of the LSH stage.
     sh = shingles(spark, sf_dir)
     edges = _exact_pairs(sh).select("d1", "d2").localCheckpoint()
-    # the eager checkpoint above is the shingle cache's LAST reader —
-    # release it here rather than leaving it to the caller (round 12;
-    # no-op on a stored snapshot, which is untagged)
-    release_caches(sh)
     sym = edges.unionByName(
         edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
     ).toDF("src", "dst")
@@ -750,7 +725,7 @@ def dd_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-blocked (never all-pairs); at 100 TB the same audit runs on
     a hash-sampled slice of the corpus (the sampler is ``smp_*``).
 
-    One shingle pipeline feeds both sides (persisted inside
+    One shingle pipeline feeds both sides (checkpointed inside
     :func:`shingles`); candidates and truth join on the pair key and the
     result is a single audit row.
     """
@@ -772,11 +747,8 @@ def dd_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "candidate_precision"
         ),
     )
-    # 1-row audit result — checkpoint it, release both candidate caches
-    # AND the shingle stage (result-sized convention; the sh handle was
-    # missing until round 12 — the same non-cascading-unpersist class of
-    # leak the r11 sweep fixed elsewhere)
-    return finalize_unpersist(out, cand, truth, sh)
+    # 1-row audit result — checkpoint it and release both candidate caches
+    return finalize_unpersist(out, cand, truth)
 
 
 #: Pair fan-out caps for the two blocked-join operators below. At test
@@ -1002,8 +974,7 @@ def dd_semantic_confirmed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     ea = emb.select(F.col("vec_id").alias("d1"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("d2"), F.col("embedding").alias("eb"))
-    # pair-grain → lazy; caller releases via session.release_caches
-    return tag_release(
+    return (
         jac.join(ea, "d1")
         .join(eb, "d2")
         .select(
@@ -1016,8 +987,7 @@ def dd_semantic_confirmed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "confirmed",
             (F.col("jaccard") >= JACCARD_THRESHOLD)
             & (F.col("cosine") >= SEMANTIC_COS_THRESHOLD),
-        ),
-        sh,
+        )
     )
 
 
@@ -1219,15 +1189,12 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
     )
     batch = read_table(spark, sf_dir, "documents").filter(is_new).select("doc_id")
-    out = batch.join(best, batch.doc_id == best.d1, "left").select(
+    return batch.join(best, batch.doc_id == best.d1, "left").select(
         "doc_id",
         F.when(F.col("d2").isNotNull(), "drop").otherwise("keep").alias("decision"),
         F.col("d2").alias("dup_of"),
         F.col("jaccard"),
     )
-    # batch-grain (corpus-proportional at daily volume) → lazy; caller
-    # releases via session.release_caches
-    return tag_release(out, sh)
 
 
 @query(
@@ -1347,10 +1314,8 @@ def pipe_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_kept"),
     )
-    # per-source census → result-sized: checkpoint and release the
-    # shingle cache (round 11 — the small-output side of the convention
-    # documented on :func:`shingles`)
-    return finalize_unpersist(out, sh)
+    # per-source census → result-sized: checkpoint it
+    return finalize_unpersist(out)
 
 
 @query(
@@ -1499,7 +1464,7 @@ def dd_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d1", "d2", F.round(agree / float(N_MINHASH), 4).alias("jaccard_est"))
     )
     exact = _verify_jaccard(cand, sh).withColumnRenamed("jaccard", "jaccard_exact")
-    out = est.join(exact, ["d1", "d2"], "left").select(
+    return est.join(exact, ["d1", "d2"], "left").select(
         "d1",
         "d2",
         "jaccard_est",
@@ -1508,8 +1473,6 @@ def dd_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(F.col("jaccard_est") - F.coalesce("jaccard_exact", F.lit(0.0))), 4
         ).alias("abs_err"),
     )
-    # pair-grain → lazy; caller releases via session.release_caches
-    return tag_release(out, sh)
 
 
 NOVELTY_BATCH = 50  # docs per simulated ingestion batch
@@ -1596,7 +1559,7 @@ def txt_novelty_decay_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty_rate"),
         )
     )
-    return finalize_unpersist(out, sh)
+    return finalize_unpersist(out)
 
 
 #: Span width for exact duplicated-span removal (tokens per span).
@@ -1817,7 +1780,7 @@ def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("shared").desc(), "dst_doc"
     )
     w_all = Window.partitionBy("src_doc")
-    out = (
+    return (
         qualifying.withColumn("prn", F.row_number().over(w_rank))
         .withColumn("tot", F.count(F.lit(1)).over(w_all))
         .filter(F.col("prn") <= PAIR_EMIT_BUDGET)
@@ -1832,8 +1795,6 @@ def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("overflow"),
         )
     )
-    # pair-grain → lazy; caller releases via session.release_caches
-    return tag_release(out, sh)
 
 
 #: Cross-split MinHash decontamination: the "bench" slice simulates the
@@ -1995,7 +1956,5 @@ def decon_minhash_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("overflow"),
         )
     )
-    # budget-capped → result-sized: checkpoint it and release the shingle
-    # cache, like dd_span_dedup_retention (ADVICE r10 — a lazy return
-    # would leak the persisted shingle blocks into a long-lived session)
-    return finalize_unpersist(out, sh)
+    # budget-capped → result-sized: checkpoint it
+    return finalize_unpersist(out)

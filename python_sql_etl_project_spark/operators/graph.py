@@ -307,9 +307,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "global_clustering"
         ),
     )
-    res = finalize_unpersist(out, oe)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, oe, pairs)
 
 
 LINKPRED_TOP_K = 20
@@ -380,8 +378,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     is rounded half-up at 6 dp in integer arithmetic (1/128-style
     terminating rationals DO land on exact 7-digit halves).
     """
-    from ..session import finalize_unpersist
-
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     li = (
         read_table(spark, sf_dir, "lineitem")
@@ -494,8 +490,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2 of it only sits ON an integer at exact powers of two, where
     both engines agree), counts are integers throughout.
     """
-    from ..session import finalize_unpersist
-
     pairs = _copurchase_pairs(spark, sf_dir).persist()
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     out = (
@@ -558,8 +552,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⋈degree join shuffles on node id twice — the same plan cost as
     one PageRank round.
     """
-    from ..session import finalize_unpersist
-
     pairs = _copurchase_pairs(spark, sf_dir).persist()
     deg = pairs.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
@@ -774,9 +766,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d").cast("bigint").alias("core_degree"),
         F.lit(k).cast("bigint").alias("k_threshold"),
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 #: Synchronous label-propagation rounds (pinned on both engines).
@@ -940,9 +930,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = labels.select(
         F.col("node").alias("part_key"), F.col("label").alias("community")
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 @query(
@@ -1055,9 +1043,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1000000
         ).alias("contribution"),
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 def min_step(edges: DataFrame, vec: DataFrame, hop: int = 0) -> DataFrame:
@@ -1194,9 +1180,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 #: Pointer-doubling CC rounds. Each combined round takes one neighbor
@@ -1283,9 +1267,7 @@ def graph_cc_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 #: Multi-source BFS: seed count and synchronous round count. The
@@ -1362,9 +1344,7 @@ def graph_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_part_key"),
     )
-    res = finalize_unpersist(out)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, pairs)
 
 
 @query(
@@ -1471,9 +1451,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering_micro"),
         )
     )
-    res = finalize_unpersist(out, oe)
-    pairs.unpersist()
-    return res
+    return finalize_unpersist(out, oe, pairs)
 
 
 #: HITS: L1-normalized hub/authority mass in integer micro-units; two
@@ -1727,6 +1705,4 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pr").alias("ppr_micro"),
         F.round(F.col("pr") / PR_SCALE, 6).alias("ppr"),
     )
-    res = finalize_unpersist(out, edges)
-    nodes.unpersist()
-    return res
+    return finalize_unpersist(out, edges, nodes)

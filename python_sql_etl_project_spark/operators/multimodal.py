@@ -1083,10 +1083,7 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded-BNLJ pattern; allowlisted in the plan audit)
         .crossJoin(F.broadcast(trunc))
     )
-    res = finalize_unpersist(out)
-    edges.unpersist()
-    ranked.unpersist()
-    return res
+    return finalize_unpersist(out, edges, ranked)
 
 
 #: Synthetic audio frame count: the 16 payload bytes, read as 16 frame

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import read_table, snapshot
+from ..session import finalize_unpersist, read_table, snapshot
 
 N_QUERIES = 8  # vec_id < 8 are the "query" vectors
 TOP_K = 5
@@ -509,6 +509,13 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KB), assignment is one narrow map over the corpus, the candidate
     join shuffles on cell id, exact cosine only on candidates.
     """
+    return finalize_unpersist(*_ivf_topk(spark, sf_dir))
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The lazy :func:`sim_ivf_topk` plan and the persisted cell assignment
+    it reads, which the caller releases. The recall audit filters the plan
+    to its sampled queries first, so only their candidates are scored."""
     emb = read_table(spark, sf_dir, "embeddings")
     cents = _centroids(emb)
 
@@ -569,11 +576,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
+    out = (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
+    return out, assign
 
 
 def cosine_batch_udf():
@@ -990,8 +998,6 @@ def sim_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # codebook = KB-sized: checkpoint it and release the two passes'
     # caches (round 11 — a lazy return left emb + assign persisted)
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, emb, assign)
 
 
@@ -1125,8 +1131,6 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     over SAMPLED queries only; the IVF side is the production plan
     itself — auditing the exact query that serves traffic, not a copy.
     """
-    from ..registry import QUERIES
-
     qmod = F.col("vec_id") < RECALL_N_QUERIES
     emb = read_table(spark, sf_dir, "embeddings")
     normed = emb.withColumn("nrm", _norm(F.col("embedding")))
@@ -1158,9 +1162,9 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id")
     )
+    ivf, assign = _ivf_topk(spark, sf_dir)
     it = (
-        QUERIES["sim_ivf_topk"](spark, sf_dir)
-        .filter(F.col("query_id") < RECALL_N_QUERIES)
+        ivf.filter(F.col("query_id") < RECALL_N_QUERIES)
         .select("query_id", F.col("neighbor_id").alias("ivf_neighbor"))
     )
     hits = (
@@ -1173,7 +1177,7 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(bt.query_id)
         .agg(F.count(it.ivf_neighbor).alias("h"))
     )
-    return hits.agg(
+    out = hits.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_queries"),
         F.round(
             F.sum("h").cast("double") / (TOP_K * F.count(F.lit(1))), 4
@@ -1182,6 +1186,7 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_perfect"),
     )
+    return finalize_unpersist(out, assign)
 
 
 #: SemDeDup within-cell cosine threshold: pairs at or above it are
@@ -1291,8 +1296,6 @@ def sim_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("keep")
         .alias("decision"),
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, home)
 
 
@@ -1361,8 +1364,6 @@ def sim_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dim rescans. Cosines use the repo's sequential-fold determinism
     recipe; agreement counts are integers.
     """
-    from ..session import finalize_unpersist
-
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -1897,8 +1898,6 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, assign, pdist)
 
 
@@ -2003,8 +2002,6 @@ def sim_ivf_scaled_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, ranked)
 
 
@@ -2300,8 +2297,6 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, assign, qdist)
 
 
@@ -2435,8 +2430,6 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, b0)
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..plans.advanced import _signed_half_up
 from ..registry import query
-from ..session import read_table, read_table_parallel
+from ..session import finalize_unpersist, read_table, read_table_parallel
 
 #: Marker-token profiles for the deterministic language-id heuristic.
 #: (The synthetic corpus draws from one engine-vocabulary; the heuristic
@@ -450,12 +450,13 @@ def txt_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = freq.groupBy("doc_id").agg(
         F.max("c").alias("mx"), F.sum("c").alias("n")
     )
-    return dup.join(top, "doc_id").select(
+    out = dup.join(top, "doc_id").select(
         "doc_id",
         "n_tokens",
         f"dup_{REP_K}gram_frac",
         F.round(F.col("mx") / F.col("n"), 4).alias("top_token_frac"),
     )
+    return finalize_unpersist(out, toks)
 
 
 @query(
@@ -571,11 +572,12 @@ def txt_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tfidf"),
     )
     w = Window.partitionBy("source").orderBy(F.desc("tfidf"), "term")
-    return (
+    out = (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TFIDF_TOP_N)
         .select("source", "rank", "term", "tfidf")
     )
+    return finalize_unpersist(out, exploded)
 
 
 @query(
@@ -750,8 +752,6 @@ def txt_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # doc-grain scores are ~100x narrower than the exploded token cache
     # they'd otherwise pin: checkpoint and release (round 11)
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, toks)
 
 
@@ -1111,8 +1111,6 @@ def txt_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither engine evaluates it.
     """
     from pyspark import StorageLevel
-
-    from ..session import finalize_unpersist
 
     toks = (
         read_table_parallel(spark, sf_dir, "documents", "doc_id")
@@ -2107,8 +2105,6 @@ def txt_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from ..session import finalize_unpersist
-
     return finalize_unpersist(out, doc)
 
 

@@ -216,19 +216,24 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
 
 
 def finalize_unpersist(df, *cached):
-    """Materialize ``df`` (eager ``localCheckpoint`` — small final results
-    only) and release the persisted intermediates that fed it.
+    """Materialize ``df`` (eager ``localCheckpoint``) and release the
+    persisted intermediates ``cached`` that fed it.
 
+    The cache-ownership rule: a function that persists a frame releases
+    it before it returns, here or with ``unpersist()``, so what it
+    returns holds no CacheManager entry. Spark keeps a persisted subplan
+    cached until someone uncaches it, and a caller cannot see a persist
+    buried in the plan it was handed. ``DataFrame.unpersist()`` does not
+    cascade into a subplan cache, so pass each persisted frame itself.
     Iterative operators (PageRank, BFS, LSH audits) persist an edge list
-    or fingerprint stage that every round re-reads. Returning a lazy
-    result that still references those caches would leak the blocks into
-    a long-lived session (bench.py masked this with ``clearCache``
-    between queries). Checkpointing the *small* final vector breaks that
-    lineage, after which the big intermediates can be dropped
-    immediately; the caller holds only result-sized blocks, freed when
-    the DataFrame is garbage-collected. Each ``cached`` frame releases
-    its own persist and every handle tagged on it (:func:`release_caches`
-    — ``DataFrame.unpersist()`` does not cascade into a subplan cache).
+    or fingerprint stage that every round re-reads; checkpointing the
+    final frame breaks that lineage, after which those caches can be
+    dropped at once.
+
+    Trade-off: the checkpoint's blocks are freed when the returned
+    DataFrame is garbage-collected, not at an explicit ``unpersist``
+    (the same holds for every ``graph.fixpoint`` round); ``bench.py``
+    and ``tools/time_query.py`` run a JVM GC before each query.
 
     ``SPARK_GRAFT_NO_CHECKPOINT=1`` returns the LAZY plan instead (no
     checkpoint, caches kept): the plan-audit tests set it so they can
@@ -241,47 +246,7 @@ def finalize_unpersist(df, *cached):
     out = df.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()
-        release_caches(c)
     return out
-
-
-def tag_release(out, *caches):
-    """Tag the persisted handles backing a LAZY result on the result
-    itself as ``_graft_release``, so the CALLER can free them once done.
-
-    One tag carries every cache a frame is responsible for. A helper
-    whose persist sits inside the returned frame's subplan tags it there
-    (:func:`operators.dedup.shingles`); a pair-grain query returning a
-    corpus-proportional LAZY plan — checkpointing it would materialize a
-    result bigger than the cache it frees — forwards those tags plus any
-    persist of its own onto its result, and the caller calls
-    :func:`release_caches` after its last action. Snapshots served by a
-    :class:`Snapshots` store carry no tag and no CacheManager entry, so
-    nothing is collected from them.
-    """
-    handles = []
-    for c in caches:
-        handles.extend(getattr(c, "_graft_release", ()))
-        try:
-            lvl = c.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                handles.append(c)
-        except Exception:  # Connect-style frames without storageLevel
-            pass
-    if handles:
-        out._graft_release = handles
-    return out
-
-
-def release_caches(df) -> None:
-    """Unpersist every handle tagged on ``df`` by :func:`tag_release`.
-
-    Call AFTER the last action on ``df``: the frame is lazy, so dropping
-    the cache earlier would force the next action to recompute the whole
-    stage uncached. Idempotent; a no-op on untagged frames, including
-    every stored snapshot."""
-    for h in getattr(df, "_graft_release", ()):
-        h.unpersist()
 
 
 class Snapshots:
@@ -298,13 +263,15 @@ class Snapshots:
     goes through it until :meth:`close`.
 
     A stage is built as an eager ``localCheckpoint`` — materialized,
-    lineage-free — after which the caches the build tagged on its frame
-    are released. A local checkpoint is not registered in the
-    CacheManager, so neither ``spark.catalog.clearCache()`` nor a
-    consumer's :func:`finalize_unpersist` / :func:`release_caches` can
-    drop it: the store owns it. ``builds`` records ``(sf_dir, stage,
-    seconds)`` for every build, so a driver reports the shared work
-    separately from the queries that read it.
+    lineage-free. A build follows the cache-ownership rule of
+    :func:`finalize_unpersist`, so it leaves no cache for the store to
+    release. A local checkpoint is not registered in the CacheManager,
+    so neither ``spark.catalog.clearCache()`` nor a consumer's
+    :func:`finalize_unpersist` can drop it: the store owns it, and its
+    blocks are freed once :meth:`close` has dropped it and the frame is
+    garbage-collected. ``builds`` records ``(sf_dir, stage, seconds)``
+    for every build, so a driver reports the shared work separately
+    from the queries that read it.
     """
 
     def __init__(self, spark: SparkSession):
@@ -329,9 +296,7 @@ class Snapshots:
         key = (sf_dir, stage)
         if fresh or key not in self._frames:
             t0 = time.perf_counter()
-            frame = build()
-            self._frames[key] = frame.localCheckpoint(eager=True)
-            release_caches(frame)
+            self._frames[key] = build().localCheckpoint(eager=True)
             self.builds.append((sf_dir, stage, time.perf_counter() - t0))
         return self._frames[key]
 
