@@ -225,11 +225,11 @@ def src_federated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         rows = (
             cust.join(
-                F.broadcast(n_db),
+                n_db,
                 cust.c_nationkey == n_db.n_nationkey,
             )
             .join(
-                F.broadcast(r_db),
+                r_db,
                 n_db.n_regionkey == r_db.r_regionkey,
             )
             .groupBy(F.col("r_name").alias("region"))

@@ -350,7 +350,7 @@ def ld_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_rows").cast("bigint").alias("t"),
         F.count(F.lit(1)).cast("bigint").alias("p"),
     )
-    return parts.crossJoin(F.broadcast(tot)).select(
+    return parts.crossJoin(tot).select(
         "part_month",
         "n_rows",
         (
@@ -516,7 +516,7 @@ def ld_column_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("l_extendedprice").alias("lo"),
         F.max("l_extendedprice").alias("hi"),
     )
-    binned = li.crossJoin(F.broadcast(bounds)).select(
+    binned = li.crossJoin(bounds).select(
         F.least(
             F.floor(
                 (F.col("l_extendedprice") - F.col("lo"))

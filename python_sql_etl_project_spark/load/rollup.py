@@ -53,9 +53,9 @@ def refresh_hourly_rollup(
     Plan shape: the source scan is FILTERED to hours past the high-water
     mark before aggregation — at scale, with an hour/date-partitioned
     landing zone, that filter prunes partitions and the refresh cost is
-    proportional to new data, not history. The high-water mark is a
-    1-row aggregate of the (small) rollup table, joined as a broadcast
-    filter, never collected.
+    proportional to new data, not history. The open hour is a 1-row
+    aggregate of the source, joined back as a filter (a broadcast
+    nested-loop join the planner picks unhinted), never collected.
     """
     events = read_table(spark, sf_dir, "events")
     # the current hour is still open — exclude it from materialization
@@ -63,8 +63,7 @@ def refresh_hourly_rollup(
         F.date_trunc("hour", F.max("ts")).alias("open_hour")
     )
     fresh = events.join(
-        F.broadcast(closed),
-        F.date_trunc("hour", F.col("ts")) < F.col("open_hour"),
+        closed, F.date_trunc("hour", F.col("ts")) < F.col("open_hour")
     ).drop("open_hour")
 
     if wh.exists(ROLLUP_TABLE):

@@ -1079,7 +1079,7 @@ def dd_substring_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") > MAX_FP_DF)
         .select("fingerprint")
     )
-    fp = fp_all.join(F.broadcast(hot), "fingerprint", "left_anti")
+    fp = fp_all.join(hot, "fingerprint", "left_anti")
     n = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = fp.select(F.col("doc_id").alias("d1"), "fingerprint")
     b = fp.select(F.col("doc_id").alias("d2"), "fingerprint")
@@ -1314,8 +1314,7 @@ def pipe_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_kept"),
     )
-    # per-source census → result-sized: checkpoint it
-    return finalize_unpersist(out)
+    return out
 
 
 @query(
@@ -1559,7 +1558,7 @@ def txt_novelty_decay_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty_rate"),
         )
     )
-    return finalize_unpersist(out)
+    return out
 
 
 #: Span width for exact duplicated-span removal (tokens per span).
@@ -1956,5 +1955,4 @@ def decon_minhash_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("overflow"),
         )
     )
-    # budget-capped → result-sized: checkpoint it
-    return finalize_unpersist(out)
+    return out

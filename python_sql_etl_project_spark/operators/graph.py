@@ -187,18 +187,17 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nodes probe the edge list, so each round flows O(edges touching
         # the frontier), not O(all-levels ⋈ E). In BFS first discovery IS
         # the minimum level, so anti-joining the seen set replaces the
-        # full union+groupBy(min) re-aggregation. The frontier probe
-        # broadcasts the frontier (bounded by the largest BFS level, and
-        # only node ids — no edge shuffle); the seen-set anti-join is
-        # left unhinted because levels grows to |V|: AQE picks broadcast
-        # while it fits and degrades to shuffle cleanly beyond. Early
-        # exit when the frontier drains; the one eager checkpoint per
-        # round is the frontier materialization isEmpty() then reads for
-        # free. levels needs no checkpoint: it is a shallow union of
-        # checkpointed frontiers.
+        # full union+groupBy(min) re-aggregation. The frontier probe and
+        # the seen-set anti-join are left to the planner because both
+        # sides grow to |V|: AQE broadcasts them while they fit and
+        # degrades to shuffle cleanly beyond. Early exit when the
+        # frontier drains; the one eager checkpoint per round is the
+        # frontier materialization isEmpty() then reads for free. levels
+        # needs no checkpoint: it is a shallow union of checkpointed
+        # frontiers.
         nxt = (
             pairs.join(
-                F.broadcast(frontier.select(F.col("node").alias("src"))),
+                frontier.select(F.col("node").alias("src")),
                 "src",
             )
             .select(F.col("dst").alias("node"))
@@ -298,7 +297,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_wedges"
         ),
     )
-    out = stats.crossJoin(F.broadcast(tri)).select(
+    out = stats.crossJoin(tri).select(
         "n_nodes",
         "n_edges",
         "n_wedges",
@@ -382,7 +381,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
     )
     per_order = li.groupBy("l_orderkey", "p_brand").agg(
         F.collect_set("l_partkey").alias("parts")
@@ -1028,7 +1027,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "degree_sum",
         )
     )
-    out = comm.crossJoin(F.broadcast(dtot)).select(
+    out = comm.crossJoin(dtot).select(
         "community",
         "n_members",
         "internal_directed_edges",
@@ -1667,7 +1666,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.join(deg, "src").persist()
     nodes = pairs.select(F.col("src").alias("node")).distinct().persist()
     seed = nodes.agg(F.min("node").alias("seed_node"))
-    ranks = nodes.crossJoin(F.broadcast(seed)).select(
+    ranks = nodes.crossJoin(seed).select(
         "node",
         F.when(F.col("node") == F.col("seed_node"), PR_SCALE)
         .otherwise(0)
@@ -1682,7 +1681,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").alias("flow"))
         )
         ranks = (
-            nodes.crossJoin(F.broadcast(seed))
+            nodes.crossJoin(seed)
             .join(flow.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",

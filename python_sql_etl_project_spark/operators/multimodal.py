@@ -1081,7 +1081,7 @@ def mm_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # 1-row truncation census broadcast onto every cluster row (the
         # bounded-BNLJ pattern; allowlisted in the plan audit)
-        .crossJoin(F.broadcast(trunc))
+        .crossJoin(trunc)
     )
     return finalize_unpersist(out, edges, ranked)
 

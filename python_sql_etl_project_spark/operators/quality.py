@@ -390,7 +390,7 @@ def dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             else expected.when(whens == d, m)
         )
     obs_micro = F.expr("(2000000 * n_rows + t) div (2 * t)")
-    return census.crossJoin(F.broadcast(tot)).select(
+    return census.crossJoin(tot).select(
         "first_digit",
         "n_rows",
         (obs_micro.cast("double") / 1000000).alias("observed_share"),
@@ -559,7 +559,7 @@ def dq_sentinel_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_occurrences"), "value")
         .limit(SENTINEL_TOP_N)
     )
-    return freq.crossJoin(F.broadcast(tot)).select(
+    return freq.crossJoin(tot).select(
         "value",
         "n_occurrences",
         (

@@ -89,21 +89,17 @@ def repair_orphan_keys(
 
 
 def enrich_left(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    broadcast_right: bool = True,
+    left: DataFrame, right: DataFrame, left_key: str, right_key: str
 ) -> DataFrame:
     """Left-enrichment join on heterogeneously named keys (J1).
 
     Reference: ``pd.merge(left_on='id_cliente', right_on='IDCLIENTE',
     how='left')`` then drop the duplicated key
     (``/root/reference/src/transform.py:91-100``). Enrichment sides are
-    dimension-scale → broadcast by default.
+    dimension-scale; the planner broadcasts one while its size estimate
+    is under the broadcast threshold.
     """
-    r = F.broadcast(right) if broadcast_right else right
-    joined = left.join(r, left[left_key] == right[right_key], "left")
+    joined = left.join(right, left[left_key] == right[right_key], "left")
     return joined.drop(right[right_key])
 
 

@@ -1396,7 +1396,7 @@ def smp_balanced_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_before"))
     )
     mx = counts.agg(F.max("n_before").cast("bigint").alias("m"))
-    return counts.crossJoin(F.broadcast(mx)).select(
+    return counts.crossJoin(mx).select(
         "lang",
         "n_before",
         F.expr("(m + n_before - 1) div n_before").cast("bigint").alias(
@@ -1587,7 +1587,7 @@ def smp_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b2"),
     )
-    phased = scored.crossJoin(F.broadcast(bounds)).select(
+    phased = scored.crossJoin(bounds).select(
         F.when(F.col("ttr_micro") <= F.col("b1"), 1)
         .when(F.col("ttr_micro") <= F.col("b2"), 2)
         .otherwise(3)
@@ -2065,7 +2065,7 @@ def smp_greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         cov = remaining.filter(F.col("doc_id") == top.doc_id).select("s")
         remaining = (
             remaining.filter(F.col("doc_id") != top.doc_id)
-            .join(F.broadcast(cov), "s", "left_anti")
+            .join(cov, "s", "left_anti")
             .localCheckpoint()
         )
     return spark.createDataFrame(
@@ -2134,7 +2134,7 @@ def smp_budget_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w").cast("bigint").alias("tw"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
     )
-    quota = src.crossJoin(F.broadcast(tot)).select(
+    quota = src.crossJoin(tot).select(
         "source",
         "w",
         F.expr(f"({APPORTION_BUDGET} * w) div tw").alias("floor_share"),
@@ -3108,7 +3108,7 @@ def smp_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("ci_hi_micro"),
     )
-    return stats.crossJoin(F.broadcast(point)).select(
+    return stats.crossJoin(point).select(
         "n_orders",
         F.lit(BOOT_REPLICATES).cast("bigint").alias("n_replicates"),
         "point_mean_micro",
@@ -3209,7 +3209,7 @@ def smp_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(obs, ["split", "source"], "left")
         .select("split", "source", "r", "c", F.coalesce("n", F.lit(0)).alias("n"))
     )
-    terms = grid.crossJoin(F.broadcast(tot)).select(
+    terms = grid.crossJoin(tot).select(
         F.expr(
             "CAST(round("
             "  CAST(CAST(n * big_n - r * c AS DECIMAL(38,0))"

@@ -74,6 +74,15 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+def _query_set(emb: DataFrame, n: int) -> DataFrame:
+    """The ``n`` query vectors ``vec_id < n``. The limit keeps the same
+    rows (ids are unique) but gives the planner a row count: a filter
+    alone is sized as the whole scan, so once the corpus outgrows the
+    broadcast threshold a non-equi join against it would plan as a
+    cartesian product instead of broadcasting the ``n`` rows."""
+    return emb.filter(F.col("vec_id") < n).limit(n)
+
+
 def _cosine_prenorm(a, b, na, nb):
     """Cosine with precomputed norms — one fold per pair instead of
     three. Bit-compatible with :func:`_cosine` and the SQL oracle: the
@@ -152,22 +161,21 @@ def _coded_capped_ctes() -> str:
 def sim_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact k-NN baseline (north-star 'brute-force cosine top-k').
 
-    The query set (``vec_id < {N_QUERIES}``) is tiny → ``broadcast()``;
-    the corpus is scanned exactly once, partitioned, with the per-pair
-    cosine fused into the scan stage. Ranking is a window per query_id
-    (shuffle on the small scored set). At 100 TB: same plan — broadcast
-    queries, one corpus pass, top-k via per-query window.
+    The query set (``vec_id < {N_QUERIES}``) is tiny and the planner
+    broadcasts it; the corpus is scanned exactly once, partitioned, with
+    the per-pair cosine fused into the scan stage. Ranking is a window
+    per query_id (shuffle on the small scored set).
     """
     emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", _norm(F.col("embedding"))
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = _query_set(emb, N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
     scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        emb.join(q, F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -645,10 +653,10 @@ def sim_knn_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     other cosine query — so einsum-vs-sequential-fold low-bit drift
     cannot reorder neighbors or change the hashed values."""
     emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = _query_set(emb, N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    scored = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+    scored = emb.join(q, F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_batch_udf()("q_emb", "embedding"), 6).alias("cosine"),
@@ -1131,10 +1139,9 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     over SAMPLED queries only; the IVF side is the production plan
     itself — auditing the exact query that serves traffic, not a copy.
     """
-    qmod = F.col("vec_id") < RECALL_N_QUERIES
     emb = read_table(spark, sf_dir, "embeddings")
     normed = emb.withColumn("nrm", _norm(F.col("embedding")))
-    qs = normed.filter(qmod).select(
+    qs = _query_set(normed, RECALL_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("nrm").alias("qn"),
@@ -1146,7 +1153,7 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     brute = (
         corpus.join(
-            F.broadcast(qs), F.col("neighbor_id") != F.col("query_id")
+            qs, F.col("neighbor_id") != F.col("query_id")
         )
         .select(
             "query_id",
@@ -1365,11 +1372,11 @@ def sim_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe; agreement counts are integers.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = _query_set(emb, N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     scored = emb.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+        q, F.col("vec_id") != F.col("query_id")
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -1675,14 +1682,14 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").withColumn(
         "nrm", _norm(F.col("embedding"))
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = _query_set(emb, N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
     scored = emb.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+        q, F.col("vec_id") != F.col("query_id")
     ).select(
         "query_id",
         "query_label",
@@ -2840,12 +2847,14 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == MMR_QUERY_ID).select(
-        F.col("embedding").alias("q_emb")
+    q = (
+        emb.filter(F.col("vec_id") == MMR_QUERY_ID)
+        .limit(1)
+        .select(F.col("embedding").alias("q_emb"))
     )
     pool = (
         emb.filter(F.col("vec_id") != MMR_QUERY_ID)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id",
             "embedding",
@@ -2876,7 +2885,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s = selected.select(F.col("embedding").alias("s_emb"))
         pick = (
-            remaining.crossJoin(F.broadcast(s))
+            remaining.crossJoin(s)
             .groupBy("vec_id", "embedding", "label", "rel")
             .agg(
                 F.max(

@@ -149,8 +149,8 @@ def flt_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = (
         fact.withColumn("idx0", F.floor(F.col("pos0") / 64).cast("int"))
         .withColumn("idx1", F.floor(F.col("pos1") / 64).cast("int"))
-        .join(F.broadcast(g0), "idx0")
-        .join(F.broadcast(g1), "idx1")
+        .join(g0, "idx0")
+        .join(g1, "idx1")
         .withColumn(
             "pass",
             F.expr(

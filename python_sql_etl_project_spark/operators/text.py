@@ -1352,7 +1352,7 @@ def txt_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(VOCAB_SIZE)
         .select("t", F.lit(1).alias("in_vocab"))
     )
-    marked = toks.join(F.broadcast(vocab), "t", "left")
+    marked = toks.join(vocab, "t", "left")
     agg = marked.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
@@ -2341,7 +2341,7 @@ def txt_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = df_census.orderBy(F.desc("df"), F.asc("tok")).limit(PMI_VOCAB_K)
     n = dt.agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
-    vt = dt.join(F.broadcast(vocab.select("tok")), "tok").select(
+    vt = dt.join(vocab.select("tok"), "tok").select(
         "doc_id", "tok"
     )
     a = vt.select("doc_id", F.col("tok").alias("tok_a"))
@@ -2358,9 +2358,9 @@ def txt_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     va = vocab.select(F.col("tok").alias("tok_a"), F.col("df").alias("df_a"))
     vb = vocab.select(F.col("tok").alias("tok_b"), F.col("df").alias("df_b"))
     return (
-        cooc.join(F.broadcast(va), "tok_a")
-        .join(F.broadcast(vb), "tok_b")
-        .crossJoin(F.broadcast(n))
+        cooc.join(va, "tok_a")
+        .join(vb, "tok_b")
+        .crossJoin(n)
         .select(
             "tok_a",
             "tok_b",

@@ -1234,7 +1234,7 @@ def win_ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(floor(revenue) AS BIGINT) div 4096"),
         [F.desc("revenue"), "o_custkey"],
         shard_desc=True,
-    ).crossJoin(F.broadcast(rev.agg(F.count(F.lit(1)).alias("n"))))
+    ).crossJoin(rev.agg(F.count(F.lit(1)).alias("n")))
     out = (
         ranked.withColumn(
             "quartile", ntile_from_rank("r", "n", 4).cast("int")
@@ -1478,7 +1478,7 @@ def jn_basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
     )
@@ -1706,7 +1706,7 @@ def win_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("last_order").alias("_anchor"),
         F.count(F.lit(1)).alias("n"),
     )
-    scored = cust.crossJoin(F.broadcast(totals)).withColumn(
+    scored = cust.crossJoin(totals).withColumn(
         "recency_days", F.datediff(F.col("_anchor"), F.col("last_order"))
     ).withColumn(
         "_mcents", (F.col("monetary") * 100).cast("bigint")
@@ -2264,10 +2264,8 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         read_table(spark, sf_dir, "orders")
         .join(
-            F.broadcast(
-                read_table(spark, sf_dir, "customer").select(
-                    "c_custkey", "c_mktsegment"
-                )
+            read_table(spark, sf_dir, "customer").select(
+                "c_custkey", "c_mktsegment"
             ),
             F.col("o_custkey") == F.col("c_custkey"),
         )
@@ -2438,7 +2436,7 @@ def agg_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = rev.agg(
         F.sum("cents").alias("t"), F.count(F.lit(1)).alias("n")
     )
-    ranked = run.crossJoin(F.broadcast(totals))
+    ranked = run.crossJoin(totals)
     hit = ranked.filter(
         5 * F.col("prefix").cast("decimal(38,0)")
         >= 4 * F.col("t").cast("decimal(38,0)")
@@ -3052,11 +3050,7 @@ def dq_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = (
         li.groupBy(F.col("l_suppkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-        .crossJoin(
-            F.broadcast(
-                li.agg(F.count(F.lit(1)).cast("bigint").alias("total_rows"))
-            )
-        )
+        .crossJoin(li.agg(F.count(F.lit(1)).cast("bigint").alias("total_rows")))
     )
     return (
         freq.select(
@@ -4768,7 +4762,7 @@ def win_lifecycle_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("o_orderdate").alias("last_order"),
         F.min("o_orderdate").alias("first_order"),
     )
-    staged = cust.crossJoin(F.broadcast(ref)).select(
+    staged = cust.crossJoin(ref).select(
         "o_custkey",
         "n_orders",
         F.datediff("dmax", "last_order").cast("bigint").alias("recency_days"),
@@ -5370,7 +5364,7 @@ def dq_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     nl = li.agg(F.count(F.lit(1)).cast("bigint").alias("n_lineitem"))
     return (
         sel.join(act, "o_orderstatus")
-        .crossJoin(F.broadcast(nl))
+        .crossJoin(nl)
         .select(
             "o_orderstatus",
             F.expr(
@@ -6255,7 +6249,7 @@ def jn_time_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hour_bin"),
     )
     matched = ev.join(
-        F.broadcast(binned),
+        binned,
         on=[
             ev.hour_bin == binned.hour_bin,
             ev.ts >= binned.w_start,
@@ -6402,7 +6396,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("i") * F.col("cents")).cast("bigint").alias("sxy"),
         F.sum(F.col("i") * F.col("i")).cast("bigint").alias("sxx"),
     )
-    return med.crossJoin(F.broadcast(sums)).select(
+    return med.crossJoin(sums).select(
         F.col("n").alias("n_months"),
         "n_pairs",
         "theil_sen_slope_micro",
@@ -7021,7 +7015,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cnt") * F.col("rank2")).cast("bigint").alias("r2_g"),
         )
     )
-    contrib = grp_stats.crossJoin(F.broadcast(tot)).select(
+    contrib = grp_stats.crossJoin(tot).select(
         "priority",
         "n_g",
         "r2_g",
@@ -7040,7 +7034,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = contrib.agg(
         F.expr("CAST(sum(h_contrib) AS DECIMAL(38,6))").alias("h_raw")
     )
-    return contrib.crossJoin(F.broadcast(h)).select(
+    return contrib.crossJoin(h).select(
         "priority",
         "n_g",
         "r2_g",
@@ -7149,7 +7143,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("tie_x").cast("bigint").alias("ties_x"),
             F.sum("tie_y").cast("bigint").alias("ties_y"),
         )
-        .crossJoin(F.broadcast(n_months))
+        .crossJoin(n_months)
         .select(
             "n_months",
             "n_pairs",
@@ -7719,7 +7713,7 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         " CAST(o_orderkey AS STRING))), 1, 12), 16, 10) AS BIGINT)"
     )
     perm_stats = (
-        two.crossJoin(F.broadcast(obs_stat.select("cut")))
+        two.crossJoin(obs_stat.select("cut"))
         .withColumn(
             "b", F.explode(F.sequence(F.lit(0), F.lit(PERM_REPLICATES - 1)))
         )
@@ -7739,7 +7733,7 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         perm_stats.crossJoin(
-            F.broadcast(obs_stat.select("n", "n_x", "obs_diff_micro"))
+            obs_stat.select("n", "n_x", "obs_diff_micro")
         )
         .groupBy("n", "n_x", "obs_diff_micro")
         .agg(
@@ -7991,10 +7985,9 @@ def jn_star_denormalize_fingerprint(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale shape: the textbook star plan — the ONE fact-fact edge
     (lineitem⋈orders) is a co-partitioned shuffle join on orderkey;
-    every dimension joins as a BROADCAST hash join (explicitly hinted:
-    part/supplier/customer/nation/region are dim-bounded), so the fact
-    stream is scanned once and never re-shuffled after the orderkey
-    stage. The fingerprint aggregate is map-side combinable.
+    every dimension under the broadcast threshold joins as a broadcast
+    hash join, so the fact stream is scanned once and never re-shuffled
+    after the orderkey stage. The fingerprint aggregate is map-side combinable.
     """
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -8027,12 +8020,12 @@ def jn_star_denormalize_fingerprint(spark: SparkSession, sf_dir: str) -> DataFra
     )
     wide = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(ns), s.s_nationkey == ns.s_nk)
-        .join(F.broadcast(nc), c.c_nationkey == nc.c_nk)
-        .join(F.broadcast(r), nc.c_rk == r.r_regionkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(ns, s.s_nationkey == ns.s_nk)
+        .join(nc, c.c_nationkey == nc.c_nk)
+        .join(r, nc.c_rk == r.r_regionkey)
         .select(
             "l_orderkey",
             "l_linenumber",
@@ -8788,7 +8781,7 @@ def ts_kaplan_meier_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    idx = census.crossJoin(F.broadcast(total)).select(
+    idx = census.crossJoin(total).select(
         "t",
         "d",
         (F.col("tot") - (F.sum("d").over(w_cum) - F.col("d"))).alias("n"),

@@ -97,11 +97,10 @@ def ref_distributor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     c = read_table(spark, sf_dir, "customer")
     return (
-        # orders is fact-scale: no broadcast hint (a forced broadcast-hash
-        # join OOMs executors at the 100 TB posture) — the size threshold /
-        # AQE picks the strategy. customer is a bounded dim → broadcast.
+        # the size threshold / AQE picks each join strategy: a forced
+        # broadcast of orders or customer OOMs executors at 100 TB.
         li.join(o, li.l_orderkey == o.o_orderkey, "left")
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey, "left")
+        .join(c, o.o_custkey == c.c_custkey, "left")
         .groupBy(
             F.coalesce(F.col("c_mktsegment"), F.lit("Venta Directa")).alias(
                 "nombre_segmento"
@@ -529,7 +528,7 @@ def win_customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend,
         F.expr("CAST(floor(total) AS BIGINT) div 4096"),
         ["total", "o_custkey"],
-    ).crossJoin(F.broadcast(spend.agg(F.count(F.lit(1)).alias("n"))))
+    ).crossJoin(spend.agg(F.count(F.lit(1)).alias("n")))
     out = ranked.select(
         "o_custkey",
         F.round("total", 2).alias("total_spend"),

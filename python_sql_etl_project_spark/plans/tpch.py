@@ -97,7 +97,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1997-01-01"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.round(
@@ -143,13 +143,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(
-            F.broadcast(s),
+            s,
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
         )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(
@@ -191,8 +191,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = read_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy(
             "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"), "n_name"
         )
@@ -342,7 +342,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(0)
     return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(100.0 * F.sum(promo) / F.sum(rev), 4).alias(
                 "promo_revenue_pct"
@@ -374,7 +374,7 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = read_table(spark, sf_dir, "lineitem")
     return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_size")
@@ -418,7 +418,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = read_table(spark, sf_dir, "customer")
     return (
-        o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        o.join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
@@ -467,7 +467,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            & q.between(20, 30))
     )
     return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
         .agg(
             F.round(
@@ -505,7 +505,7 @@ def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o_keys = read_table(spark, sf_dir, "orders").select("o_custkey")
     return (
-        c.crossJoin(F.broadcast(avg_bal))
+        c.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("ab"))
         .join(o_keys, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy("c_nationkey")
@@ -545,7 +545,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (0.2 * F.avg("l_quantity")).alias("threshold")
     )
     return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .join(part_avg, F.col("pa_key") == F.col("l_partkey"))
         .filter(F.col("l_quantity") < F.col("threshold"))
         .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
@@ -603,7 +603,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_late_sup")
     )
     return (
-        late.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        late.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(order_suppliers, "l_orderkey")
         .join(order_late, "l_orderkey")
         .filter((F.col("n_sup") > 1) & (F.col("n_late_sup") == 1))
@@ -639,7 +639,7 @@ def q2_cheapest_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFra
     n = read_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_nationkey").orderBy("s_acctbal", "s_suppkey")
     return (
-        s.join(F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey"))
+        s.join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
@@ -713,8 +713,11 @@ def q7_bination_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q9_profit_by_nation_year",
     oracle="""
     SELECT n_name AS nation, date_part('year', l_shipdate) AS ship_year,
-           round(sum(l_extendedprice * (1 - l_discount)
-                     - 0.6 * p_retailprice * l_quantity), 2) AS profit
+           CAST(round(sum(
+               CAST(l_extendedprice AS DECIMAL(14, 2))
+               * (1 - CAST(l_discount AS DECIMAL(4, 2)))
+               - CAST(0.6 AS DECIMAL(2, 1)) * CAST(p_retailprice AS DECIMAL(14, 2))
+                 * CAST(l_quantity AS DECIMAL(14, 2))), 2) AS DOUBLE) AS profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     JOIN supplier ON s_suppkey = l_suppkey
@@ -728,24 +731,36 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product profit (TPC-H Q9 shape, cost modeled from retail price —
     this schema has no partsupp): revenue minus modeled cost per
     supplier nation and ship year, with a LIKE predicate pushed to the
-    part dim before its broadcast.
+    part dim before its join.
+
+    Exact decimal arithmetic, as in q11: prices, discounts and
+    quantities are 2-decimal values stored as doubles. A double sum's
+    low bits depend on the summation order, which follows the join
+    strategy, so a profit near a rounding boundary rounded differently
+    with auto-broadcast and AQE off (NATION_15/2000 at sf0.001).
     """
     li = read_table(spark, sf_dir, "lineitem")
     p = read_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     s = read_table(spark, sf_dir, "supplier")
     n = read_table(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.6 * F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
+    revenue = F.col("l_extendedprice").cast("decimal(14,2)") * (
+        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
+    )
+    cost = (
+        F.expr("CAST(0.6 AS DECIMAL(2, 1))")
+        * F.col("p_retailprice").cast("decimal(14,2)")
+        * F.col("l_quantity").cast("decimal(14,2)")
+    )
+    profit = revenue - cost
     return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey"))
+        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("l_shipdate").cast("bigint").alias("ship_year"),
         )
-        .agg(F.round(F.sum(profit), 2).alias("profit"))
+        .agg(F.round(F.sum(profit), 2).cast("double").alias("profit"))
         .orderBy("nation", "ship_year")
     )
 
@@ -820,7 +835,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = read_table(spark, sf_dir, "nation")
     r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cn = n.select("n_nationkey", "n_regionkey").join(
-        F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey")
+        r, F.col("r_regionkey") == F.col("n_regionkey")
     ).select(F.col("n_nationkey").alias("cn_key"))
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
@@ -828,10 +843,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     vol = (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(cn), F.col("cn_key") == F.col("c_nationkey"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(sn), F.col("sn_key") == F.col("s_nationkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
+        .join(cn, F.col("cn_key") == F.col("c_nationkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(sn, F.col("sn_key") == F.col("s_nationkey"))
         .select(
             F.year("o_orderdate").cast("bigint").alias("yr"),
             v.alias("v"),
@@ -882,7 +897,7 @@ def q11_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_rev = li.groupBy("l_partkey").agg(F.sum(v).alias("rev"))
     total = part_rev.agg(F.sum("rev").alias("t"))
     return (
-        part_rev.crossJoin(F.broadcast(total))
+        part_rev.crossJoin(total)
         .filter(
             F.col("rev").cast("double") > 0.0002 * F.col("t").cast("double")
         )
@@ -931,9 +946,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = srev.agg(F.max("total_rev").alias("m"))
     s = read_table(spark, sf_dir, "supplier")
     return (
-        srev.crossJoin(F.broadcast(mx))
+        srev.crossJoin(mx)
         .filter(F.col("total_rev") == F.col("m"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .select("s_suppkey", "s_name", F.round("total_rev", 2).alias("total_rev"))
         .orderBy("s_suppkey")
     )
@@ -966,7 +981,7 @@ def q20_red_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     heavy = (
         li.join(
-            F.broadcast(p.select("p_partkey")),
+            p.select("p_partkey"),
             F.col("p_partkey") == F.col("l_partkey"),
             "left_semi",
         )

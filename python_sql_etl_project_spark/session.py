@@ -119,8 +119,15 @@ def build_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # broadcast threshold: dims in this engine are KB-MB scale; 64 MB
-        # keeps every dim join a broadcast-hash join even at sf100.
+        # join strategy is the planner's call: a side whose size estimate
+        # is under 64 MB is broadcast, a larger one (a growing dim such
+        # as customer or part at sf100) is shuffled, and AQE re-plans on
+        # runtime sizes. Without column statistics the estimate of a
+        # filter or grouped aggregate is the size of the scan under it,
+        # so a side small in fact can still outgrow the threshold. A
+        # query forces F.broadcast only where its plan changes without
+        # the hint, at this threshold or at it scaled to sf100
+        # (tests/test_plan_audit.py).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

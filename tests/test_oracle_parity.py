@@ -43,8 +43,7 @@ WATERMARK_LAG_PINNED_MINOR = "4.1"
 VERSION_PINNED = {"strm_watermark_late_drop", "strm_signup_purchase_leftouter"}
 
 
-@pytest.mark.parametrize("name", sorted(registry.ORACLES))
-def test_query_matches_oracle(spark, name):
+def _assert_parity(spark, name):
     if name in VERSION_PINNED and not spark.version.startswith(
         WATERMARK_LAG_PINNED_MINOR
     ):
@@ -58,6 +57,35 @@ def test_query_matches_oracle(spark, name):
             )
         return
     assert_query_matches_oracle(spark, name, PARITY_SF_DIR)
+
+
+@pytest.mark.parametrize("name", sorted(registry.ORACLES))
+def test_query_matches_oracle(spark, name):
+    _assert_parity(spark, name)
+
+
+#: Join strategy forced away from the session's posture: no
+#: auto-broadcast (only explicit hints still broadcast) and no AQE
+#: re-planning.
+HOSTILE_JOIN_CONF = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
+@pytest.mark.parametrize("name", sorted(registry.ORACLES))
+def test_query_matches_oracle_under_hostile_join_conf(spark, name):
+    """Join strategy is the planner's call, so no result may depend on
+    it: every query also matches its oracle with auto-broadcast and AQE
+    switched off."""
+    prev = {k: spark.conf.get(k) for k in HOSTILE_JOIN_CONF}
+    try:
+        for k, v in HOSTILE_JOIN_CONF.items():
+            spark.conf.set(k, v)
+        _assert_parity(spark, name)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_every_query_runs(spark):

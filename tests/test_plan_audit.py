@@ -5,11 +5,20 @@ cluster-killers: cartesian products and *unintended* broadcast
 nested-loop joins. Queries whose semantics genuinely need a non-equi
 join against a broadcast-small side are allowlisted explicitly, so any
 new accidental cross join fails CI instead of failing at scale.
+
+Join strategy is otherwise the planner's: every explicit broadcast hint
+must change its query's plan, and none may cover a raw fact scan.
 """
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from python_sql_etl_project_spark import registry
 
@@ -139,8 +148,9 @@ BNLJ_ALLOWED = {
         "1-row (n, sum) mean broadcast — day-grain frame, calendar-bounded"
     ),
     "sim_mmr_diversify": (
-        "1-row query-vector broadcast for the pool build, then the "
-        "<=5-row selected-set broadcast per greedy round (pool-bounded)"
+        "1-row query vector (a limit the planner sizes) joined to the "
+        "corpus for the pool build, then the <=5-row selected set per "
+        "greedy round (pool-bounded)"
     ),
     "smp_bootstrap_ci": (
         "1-row point-estimate aggregate broadcast onto the 1-row "
@@ -231,14 +241,7 @@ _BOUNDING_NODES = ("Aggregate", "Deduplicate", "GlobalLimit", "Sample")
 #: by something the node-detector can't see (e.g. a constant key-range
 #: filter that fixes the row count independent of corpus size).
 FACT_HINT_ALLOWED = {
-    "sim_knn_brute": "query set is Filter(vec_id < 8): constant 8 rows",
     "sim_ndcg_eval": "eval-query set is Filter(vec_id < 8): constant 8 rows",
-    "sim_knn_pandas_udf": "query set is Filter(vec_id < 8): constant 8 rows",
-    "sim_hard_negatives": "query set is Filter(vec_id < 8): constant 8 rows",
-    "sim_matryoshka_audit": "query set is Filter(vec_id < 8): constant 8 rows",
-    "sim_ivf_recall_audit": (
-        "exact-baseline query set is Filter(vec_id < 25): constant 25 rows"
-    ),
     "sim_kmeans_codebook": (
         "initial codebook is Filter(vec_id < K): constant K rows; later "
         "iterations' codebooks pass through the Aggregate bound"
@@ -284,6 +287,23 @@ def _hinted_subtrees(plan: str):
         yield sub
 
 
+def _raw_fact_hints(spark, name):
+    """Text of each broadcast-hinted subtree of ``name``'s analyzed plan
+    that scans a fact table with no bounding node in between."""
+    df = registry.QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    raw = []
+    for sub in _hinted_subtrees(plan):
+        text = "\n".join(sub)
+        scans_fact = any(
+            f" {sig}" in text or f"[{sig}" in text
+            for sig in _FACT_SIGNATURES.values()
+        ) and "Relation" in text
+        if scans_fact and not any(n in text for n in _BOUNDING_NODES):
+            raw.append(text)
+    return raw
+
+
 @pytest.mark.parametrize(
     "name",
     sorted(
@@ -299,19 +319,191 @@ def test_no_raw_fact_broadcast_hint(spark, name):
     logical plan (where hints are still visible) rather than the physical
     plan, so Catalyst's own threshold-gated auto-broadcasts — which stop
     happening once the side outgrows the threshold — don't false-alarm."""
-    df = registry.QUERIES[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    for sub in _hinted_subtrees(plan):
-        text = "\n".join(sub)
-        scans_fact = any(
-            f" {sig}" in text or f"[{sig}" in text
-            for sig in _FACT_SIGNATURES.values()
-        ) and "Relation" in text
-        if scans_fact:
-            bounded = any(n in text for n in _BOUNDING_NODES)
-            assert bounded, (
-                f"{name}: broadcast hint over a raw fact scan:\n{text[:2000]}"
-            )
+    raw = _raw_fact_hints(spark, name)
+    assert not raw, f"{name}: broadcast hint over a raw fact scan:\n{raw[0][:2000]}"
+
+
+@pytest.mark.parametrize("name", sorted(FACT_HINT_ALLOWED))
+def test_fact_hint_allowlist_is_current(spark, name):
+    """Every ``FACT_HINT_ALLOWED`` entry still hints a fact subtree the
+    node detector cannot bound, so the list cannot go stale."""
+    assert _raw_fact_hints(spark, name), (
+        f"{name} no longer hints a raw fact subtree: drop its "
+        "FACT_HINT_ALLOWED entry"
+    )
+
+
+#: sf0.01, not sf0.001: at sf0.001 every side shrinks under the
+#: auto-broadcast threshold, so a hint that is needed at sf0.01 would
+#: look redundant.
+HINT_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+#: The session's 64 MB broadcast threshold scaled from sf100 down to
+#: sf0.01 (x1e-4): every table that grows with the scale factor is past
+#: it, as at sf100, while nation and region stay under.
+SF100_THRESHOLD = 64 * 1024 * 1024 // 10_000
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sim_knn_brute",
+        "sim_knn_pandas_udf",
+        "sim_hard_negatives",
+        "sim_matryoshka_audit",
+        "sim_ivf_recall_audit",
+        "sim_mmr_diversify",
+    ],
+)
+def test_constant_query_set_broadcasts_past_the_threshold(
+    spark, name, monkeypatch
+):
+    """The brute-force k-NN family and the MMR pool build join the
+    corpus to a constant query set on a non-equi condition, unhinted.
+    With the broadcast threshold scaled to sf100 (the corpus past it),
+    the query set must still be broadcast by its planner-visible row
+    count: a cartesian product here is the large-scale failure."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    monkeypatch.setattr(_CDF, "localCheckpoint", lambda self, *a, **k: self)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(SF100_THRESHOLD))
+    try:
+        df = registry.QUERIES[name](spark, HINT_SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    assert "BroadcastNestedLoopJoin" in plan, plan[:3000]
+
+
+def _calls_broadcast(fn: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "broadcast"
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "F"
+        for n in ast.walk(fn)
+    )
+
+
+def _hinting_queries():
+    """Registered queries whose own function body calls ``F.broadcast``
+    (hints in shared helpers are judged through their callers)."""
+    root = pathlib.Path(registry.__file__).parent
+    names = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(node, ast.FunctionDef) or not _calls_broadcast(node):
+                continue
+            for d in node.decorator_list:
+                if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query":
+                    names.append(d.args[0].value)
+    return sorted(names)
+
+
+def _normalized_plan(df) -> str:
+    """Executed plan text without what differs between two builds of one
+    plan: expression and plan ids, lambda-variable suffixes, and the
+    truncated scan filters whose cut point moves with the ids."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for pattern, repl in (
+        (r"#\d+L?", ""),
+        (r"plan_id=\d+", ""),
+        (r"(lambda \w+?)_\d+\b", r"\1"),
+        (r"(FileScan .*?)DataFilters: .*", r"\1"),
+    ):
+        plan = re.sub(pattern, repl, plan)
+    return plan
+
+
+def _plan_skeleton(plan: str) -> str:
+    """The operator tree of a plan text without operator arguments, but
+    with each join's build side: what a broadcast hint can change."""
+    lines = []
+    for line in plan.splitlines():
+        m = re.match(r"([\s:+\-*()\d]*)(\w+)", line)
+        if m:
+            side = re.search(r"\bBuild(Left|Right)\b", line)
+            node = m.group(1) + m.group(2)
+            lines.append(f"{node} {side.group(0)}" if side else node)
+    return "\n".join(lines)
+
+
+#: name → what bounds the side it hints independent of scale, for hints
+#: that change the plan only past ``SF100_THRESHOLD``. Catalyst sizes a
+#: grouped aggregate (or a window over one) like the scan under it, so
+#: unhinted such a side would be shuffle-joined at sf100, shuffling the
+#: large side it is joined to.
+SCALE_BOUNDED_HINTS = {
+    "agg_approx_sketches": "per-l_returnflag approx medians (3 rows)",
+    "agg_cohort_ltv": "cohort sizes per order month (calendar-bounded)",
+    "agg_entropy_mix": "per-source totals (|sources| rows)",
+    "agg_kruskal_wallis": "shard-grain rank offsets (N/span rows)",
+    "agg_mann_whitney_u": "shard-grain rank offsets (N/span rows)",
+    "agg_median_abs_deviation": "per-event-type medians",
+    "pipe_dataset_card": "per-source modal language (|sources| rows)",
+    "sim_pq_audit": "PQ centroids: |labels| x embedding dims rows",
+    "sk_countmin_heavy_hitters": "two count-min rows of CMS_WIDTH counters",
+    "smp_systematic_resample": "shard-grain weight offsets (N/span rows)",
+    "ts_seasonality_index": "per-event-type hourly means",
+    "txt_js_divergence": "per-source token totals (|sources| rows)",
+    "win_markov_transitions": "per-state transition totals (|event types| rows)",
+    "win_retention_halflife": "cohort sizes per signup week (calendar-bounded)",
+    "win_skyline_price_recency": "skyline over per-day maxima (<= |days| rows)",
+}
+
+
+def test_scale_bounded_hints_are_hinting_queries():
+    assert set(SCALE_BOUNDED_HINTS) <= set(_hinting_queries())
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in _hinting_queries() if n not in SKIP]
+)
+def test_broadcast_hints_are_load_bearing(spark, name, monkeypatch):
+    """Join strategy is the planner's call (the session's broadcast
+    threshold plus AQE). A query may force ``F.broadcast`` only where
+    its sf0.01 physical plan changes without the hint: a flipped build
+    side, a sort-merge join or a cartesian product the planner would
+    pick instead. A hint the planner already reproduces is dead weight
+    and, at a larger scale, a forced broadcast of a growing side. A hint
+    on a side bounded independent of scale (``SCALE_BOUNDED_HINTS``) is
+    checked at ``SF100_THRESHOLD``, where its estimate outgrows it."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    monkeypatch.setattr(_CDF, "localCheckpoint", lambda self, *a, **k: self)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    if name in SCALE_BOUNDED_HINTS:
+        threshold = str(SF100_THRESHOLD)
+    else:
+        threshold = spark.conf.get(key)
+
+    def plan():
+        prev = spark.conf.get(key)
+        spark.conf.set(key, threshold)
+        try:
+            df = registry.QUERIES[name](spark, HINT_SF_DIR)
+            return _normalized_plan(df)
+        finally:
+            spark.conf.set(key, prev)
+            spark.catalog.clearCache()
+
+    hinted, again = plan(), plan()
+    monkeypatch.setattr(F, "broadcast", lambda df: df)
+    bare = plan()
+    if hinted != again:
+        # Not a stable fingerprint: distinct aggregates number their
+        # grouping sets in expression-id hash order, which moves from
+        # build to build. Compare operator trees instead.
+        hinted, again, bare = map(_plan_skeleton, (hinted, again, bare))
+        assert hinted == again, f"{name}: hinted plan differs between builds"
+    assert hinted != bare, (
+        f"{name}: the planner picks the same plan without its "
+        "F.broadcast hints; delete them"
+    )
 
 
 def test_lpa_rounds_stay_hashaggregate_single_exchange(spark, monkeypatch):
