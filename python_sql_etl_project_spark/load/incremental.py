@@ -7,24 +7,31 @@ semantics are a distributed ``left_anti`` join against a key-only scan of
 the target table: the planner broadcasts the smaller side or shuffles on
 the key, the driver never sees a row.
 
-Each table loads in two halves: a read-only *stage* (key scan, anti-join
-and ONE observed ``count()`` of the persisted new rows, which yields both
-the inserted and the ignored count) and a *commit* (the write, from that
-cache). Every action re-plans the whole star-schema lineage, and at
-daily-batch scale that planning costs more than the data, so a table
-costs one action plus its write. :meth:`Warehouse.load_ordered` runs the
-stages concurrently and the commits one at a time in FK order.
+Each table loads in two halves. The *stage* is one Spark action: key
+scan, anti-join, and a write of the new rows into a staging directory of
+its own, with an ``Observation`` of the source rows and one of the kept
+rows riding on that write, so the inserted and ignored counts cost no
+job of their own and nothing is cached. The *commit* publishes the
+staged files into the table directory by rename, on the driver. Every
+action re-plans the whole star-schema lineage, and at daily-batch scale
+that planning costs more than the data, so a table costs one action.
+:meth:`Warehouse.load_ordered` runs the stages concurrently and the
+commits one at a time in FK order.
 
 Warehouse format: parquet directories (one per table) under a base dir —
 the fact table partitioned by order date so the report queries get
-partition pruning. :mod:`.jdbc` provides the JDBC mirror (S4/S5 parity):
-the same contract with JDBC storage primitives.
+partition pruning. Commit-by-rename assumes a filesystem where renaming a
+file is cheap and atomic (local, HDFS); an object store needs a committer
+instead. :mod:`.jdbc` provides the JDBC mirror (S4/S5 parity): the same
+contract with JDBC storage primitives and a cache-then-append load.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -34,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..operators.relational import anti_join
+from ..session import read_parquet
 
 logger = logging.getLogger(__name__)
 
@@ -49,6 +57,10 @@ PK_MAP = {
 #: Fact tables get date partitioning → dynamic partition pruning for the
 #: report queries (SURVEY §7.2 step 4).
 PARTITION_MAP = {"fct_transacciones": ("fecha_trx", "_fecha_dt")}
+
+#: Directory under ``base_dir`` that stages hold their writes in until
+#: the commit publishes them.
+STAGING = "_staging"
 
 
 @dataclass
@@ -100,7 +112,7 @@ class Warehouse:
         return False
 
     def read(self, table: str) -> DataFrame:
-        df = self.spark.read.parquet(self.path(table))
+        df = read_parquet(self.spark, self.path(table))
         part = PARTITION_MAP.get(table)
         if part and part[1] in df.columns:
             df = df.drop(part[1])
@@ -112,7 +124,7 @@ class Warehouse:
         footer, distributed, never collected."""
         if not self.exists(table):
             return None
-        return self.spark.read.parquet(self.path(table)).select(pk)
+        return read_parquet(self.spark, self.path(table)).select(pk)
 
     def incremental_append(self, df: DataFrame, table: str) -> LoadResult:
         """PK-idempotent append (the reference's ``src/load.py:20-68``):
@@ -127,12 +139,14 @@ class Warehouse:
         """Ordered load with per-table failure isolation
         (the reference's ``src/main.py:72-94``).
 
-        The read-only stages run concurrently, one worker thread per
-        table: each reads only its own target's keys, so no stage can
-        see another table's commit. The commits then run one at a time
-        in the order of ``tables`` (parent dims → child dim → fact), each
-        as soon as its own stage is done. A failing table, in either
-        half, does not stop the rest.
+        The stages run concurrently, one worker thread per table, so
+        their writes overlap: each reads only its own target's keys and
+        writes only its own staging directory, so no stage can see
+        another table's commit. The commits then run one at a time in the
+        order of ``tables`` (parent dims → child dim → fact), each as
+        soon as its own stage is done. A failing table, in either half,
+        does not stop the rest. Staging left behind by an earlier load
+        that crashed is deleted first.
 
         Workers inherit the caller's local properties and tags (job
         group, scheduler pool), so their jobs stay attributed to the
@@ -140,6 +154,7 @@ class Warehouse:
         properties once, and threads sharing one clone would overwrite
         each other's SQL execution id.
         """
+        self._clear_staging()
         with ThreadPoolExecutor(
             max_workers=max(len(tables), 1), thread_name_prefix="load-stage"
         ) as pool:
@@ -151,62 +166,85 @@ class Warehouse:
             ]
             return [self._isolated(name, fut.result) for name, fut in staged]
 
-    def _stage(
-        self, df: DataFrame, table: str
-    ) -> tuple[DataFrame | None, LoadResult]:
-        """Read-only half of a load: one action, no write.
-
-        1. key-only scan of existing rows (missing table → everything new)
-        2. distributed left-anti join on the PK
-        3. one ``count()`` of the persisted new rows, with an observation
-           on the source that counts the rows seen on the way
-
-        The count is the number of rows kept and the observation the rows
-        seen, so ``ignored = seen - kept`` comes from the same single
-        materialization that the write later reads from the cache — a
-        nondeterministic source cannot make the reported counts disagree
-        with what is written. A source with no rows keeps none, which is
-        the empty-source guard (P11): nothing is written, not even a
-        schema-only file. Returns the rows to write (``None`` when none)
-        and the result.
-        """
+    def _new_rows(self, df: DataFrame, table: str) -> tuple[Observation, DataFrame]:
+        """The rows of ``df`` whose key is not in ``table`` yet (all of
+        them for a new table, or for one without a PK mapping), and an
+        observation counting the source rows the first action reads."""
         pk = PK_MAP.get(table)
         if pk is None:
             logger.warning("table %s has no PK mapping; direct append", table)
-            return df, LoadResult(table, -1, 0, True)
-
         seen = Observation()
         source = df.observe(seen, F.count(F.lit(1)))
-        existing = self.existing_keys(table, pk)
-        new_rows = source if existing is None else anti_join(source, existing, pk)
-        new_rows = new_rows.persist()
+        existing = self.existing_keys(table, pk) if pk else None
+        return seen, source if existing is None else anti_join(source, existing, pk)
+
+    def _stage(self, df: DataFrame, table: str) -> tuple[str | None, LoadResult]:
+        """First half of a load: one Spark action, which writes the new
+        rows into a staging directory of their own.
+
+        1. key-only scan of existing rows (missing table → everything new)
+        2. distributed left-anti join on the PK
+        3. one write of the kept rows to ``_staging/<table>-<uuid>``
+           (the fact table partitioned by order date), observing the
+           source rows on the way in and the kept rows on the way out
+
+        inserted = kept and ignored = seen - kept come from the same
+        single materialization that wrote the rows — a nondeterministic
+        source cannot make the reported counts disagree with what is
+        written, and nothing is cached. A source with no rows keeps none,
+        and the staging directory is then deleted, which is the
+        empty-source guard (P11): nothing is published, not even a
+        schema-only file. A stage that raises deletes its staging
+        directory too. Returns the staging directory (``None`` when
+        nothing was kept) and the result.
+        """
+        staging = os.path.join(self.base_dir, STAGING, f"{table}-{uuid.uuid4().hex}")
+        seen, new_rows = self._new_rows(df, table)
+        kept = Observation()
         try:
-            inserted = new_rows.count()
+            _write(new_rows.observe(kept, F.count(F.lit(1))), table, staging)
+            inserted = _observed_count(kept)
             total = _observed_count(seen)
-        except Exception:
-            new_rows.unpersist()
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
             raise
         if not inserted:
-            new_rows.unpersist()
+            shutil.rmtree(staging, ignore_errors=True)
             return None, LoadResult(table, 0, total, True)
-        return new_rows, LoadResult(table, inserted, total - inserted, True)
+        return staging, LoadResult(table, inserted, total - inserted, True)
 
-    def _commit(self, rows: DataFrame | None, result: LoadResult) -> LoadResult:
-        """Write half of a load: append the staged rows, then release
-        the cache :meth:`_stage` made for them."""
-        if rows is None:
+    def _commit(self, staging: str | None, result: LoadResult) -> LoadResult:
+        """Second half of a load: publish the staged files into the table
+        directory on the driver, then drop the staging directory.
+
+        Each file keeps its path relative to the staging root (partition
+        subdirectories and ``.crc`` checksums included) and is moved by a
+        rename; Spark names part files by job, so they never collide with
+        earlier appends. The ``_SUCCESS`` marker moves last, so a reader
+        never sees the marker before the rows it commits.
+        """
+        if staging is None:
             return result
         try:
-            self._write(rows, result.table)
+            target = self.path(result.table)
+            moves = []
+            for root, _, files in os.walk(staging):
+                rel = os.path.relpath(root, staging)
+                os.makedirs(os.path.join(target, rel), exist_ok=True)
+                moves += [os.path.join(rel, f) for f in files]
+            moves.sort(key=lambda f: "_SUCCESS" in f)
+            for f in moves:
+                os.replace(os.path.join(staging, f), os.path.join(target, f))
         finally:
-            # inserted is -1 on the direct append: the caller's frame,
-            # whose caching is not ours to undo
-            if result.inserted > 0:
-                rows.unpersist()
+            shutil.rmtree(staging, ignore_errors=True)
         return result
 
+    def _clear_staging(self) -> None:
+        """Delete what stages of an earlier, crashed load left behind."""
+        shutil.rmtree(os.path.join(self.base_dir, STAGING), ignore_errors=True)
+
     def _isolated(
-        self, table: str, stage: Callable[[], tuple[DataFrame | None, LoadResult]]
+        self, table: str, stage: Callable[[], tuple[object, LoadResult]]
     ) -> LoadResult:
         """Commit the output of ``stage()``; any failure marks only this
         table failed."""
@@ -216,19 +254,23 @@ class Warehouse:
             logger.exception("incremental load failed for %s", table)
             return LoadResult(table, 0, 0, False)
 
-    def _write(self, df: DataFrame, table: str) -> None:
-        part = PARTITION_MAP.get(table)
-        writer = df.write.mode("append")
-        if part is not None:
-            src, part_col = part
-            df = df.withColumn(part_col, F.to_date(F.col(src)))
-            writer = df.write.mode("append").partitionBy(part_col)
-        writer.parquet(self.path(table))
-
     def register_views(self) -> None:
         for table in PK_MAP:
             if self.exists(table):
                 self.read(table).createOrReplaceTempView(table)
+
+
+def _write(df: DataFrame, table: str, path: str) -> None:
+    """Write ``df`` as parquet into the new directory ``path``; the fact
+    table gets its date partition column."""
+    part = PARTITION_MAP.get(table)
+    if part is None:
+        df.write.parquet(path)
+        return
+    src, part_col = part
+    df.withColumn(part_col, F.to_date(F.col(src))).write.partitionBy(
+        part_col
+    ).parquet(path)
 
 
 def write_bucketed(

@@ -32,7 +32,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from .incremental import Warehouse
+from .incremental import LoadResult, Warehouse, _observed_count
 
 logger = logging.getLogger(__name__)
 
@@ -51,9 +51,11 @@ class JdbcWarehouse(Warehouse):
     """The :class:`Warehouse` contract over a JDBC database.
 
     Storage primitives (``exists`` / ``read`` / ``existing_keys`` /
-    ``_write``) are JDBC; the idempotent anti-join append, ordered load
-    and per-table failure isolation are inherited unchanged — the load
-    semantics do not care which sink they talk to.
+    ``_write``) are JDBC, and so are the two halves of a table's load:
+    a database has no file rename to publish staged files by, so a stage
+    caches and counts its new rows and the commit appends them. The
+    anti-join, the ordered load with concurrent stages and the
+    per-table failure isolation are inherited unchanged.
     """
 
     def __init__(
@@ -128,6 +130,42 @@ class JdbcWarehouse(Warehouse):
         if not self.exists(table):
             return None
         return self.read(table).select(pk)
+
+    # -- load halves --------------------------------------------------------
+
+    def _stage(
+        self, df: DataFrame, table: str
+    ) -> tuple[DataFrame | None, LoadResult]:
+        """One ``count()`` of the persisted new rows, observing the source
+        on the way: inserted and ignored from one materialization, which
+        :meth:`_commit` then appends from the cache. No rows kept → no
+        write (P11)."""
+        seen, new_rows = self._new_rows(df, table)
+        new_rows = new_rows.persist()
+        try:
+            inserted = new_rows.count()
+            total = _observed_count(seen)
+        except Exception:
+            new_rows.unpersist()
+            raise
+        if not inserted:
+            new_rows.unpersist()
+            return None, LoadResult(table, 0, total, True)
+        return new_rows, LoadResult(table, inserted, total - inserted, True)
+
+    def _commit(self, rows: DataFrame | None, result: LoadResult) -> LoadResult:
+        """Append the staged rows, then release the cache :meth:`_stage`
+        made for them."""
+        if rows is None:
+            return result
+        try:
+            self._write(rows, result.table)
+        finally:
+            rows.unpersist()
+        return result
+
+    def _clear_staging(self) -> None:
+        """Nothing to clear: stages keep their rows in the cache."""
 
     def _write(self, df: DataFrame, table: str) -> None:
         """Append-mode JDBC write (S5): per-partition batched INSERTs;

@@ -18,10 +18,13 @@ with one module owning every semantics-bearing config:
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import time
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 #: Shuffle partitions for local mode: match cores, not the 200 default.
 #: On a real cluster this is sized so that (input bytes / partitions)
@@ -195,6 +198,79 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
             read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def _first_data_file(path: str) -> str | None:
+    """The first parquet data file under ``path`` in sorted order, skipping
+    the names Spark's file index hides (``.*``, and ``_*`` unless it is a
+    ``key=value`` partition directory); None when there is none."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(
+            d
+            for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        )
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+@functools.cache
+def _parquet_classes(jvm):
+    """The JVM classes :func:`parquet_schema` calls, resolved once per
+    gateway: each lookup of a class path is a py4j round trip."""
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return (
+        jvm.org.apache.hadoop.fs.Path,
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+        jvm.org.apache.parquet.hadoop.Footer,
+        pq.ParquetFooterReader,
+        pq.ParquetToSparkSchemaConverter,
+        pq.ParquetFileFormat,
+    )
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read from one
+    parquet footer on the driver; None when ``path`` holds no data file.
+
+    Spark infers a parquet schema with a job that reads a footer on an
+    executor, one job per scan. Here the footer of the first data file is
+    converted by the session's own converter
+    (``ParquetFileFormat.readSchemaFromFooter``), so the result honours
+    the same confs (``nanosAsLong``, binary-as-string, NTZ inference) and
+    is made nullable as the file source does. The schema is that of the
+    data files: partition columns are not in it, and a reader given it
+    still discovers them from the directory names. Like Spark without
+    ``mergeSchema``, it assumes every file of the table has one schema.
+    """
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return None
+    Path, InputFile, no_filter, Footer, FooterReader, Converter, Format = (
+        _parquet_classes(spark._jvm)
+    )
+    jsession = spark._jsparkSession
+    jpath = Path(data_file)
+    meta = FooterReader.readFooter(
+        InputFile.fromPath(jpath, jsession.sessionState().newHadoopConf()), no_filter
+    )
+    converter = Converter(jsession.sessionState().conf())
+    schema = Format.readSchemaFromFooter(Footer(jpath, meta), converter)
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)`` without the schema-inference job: the
+    schema comes from :func:`parquet_schema`. A path with no data file
+    goes to the plain read, which raises as it always has."""
+    schema = parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Lazy parquet scan of one testdata table (column-pruned, pushdown-able).
 
@@ -208,7 +284,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         dt = df.schema["ts"].dataType
         if isinstance(dt, T.LongType):

@@ -35,14 +35,16 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
+from ..session import read_parquet
 
 def _events_schema(spark: SparkSession, path: str) -> T.StructType:
     """File-stream sources require a user-declared schema; derive it from
-    the parquet footer via a batch read so the stream sees the same
-    physical types the batch path does. ``ts`` may surface as either a
-    proper TIMESTAMP (µs-encoded files) or a raw-ns LongType (ns-encoded
-    files under ``nanosAsLong``) — :func:`stream_events` normalizes."""
-    return spark.read.parquet(path).schema
+    the parquet footer (:func:`..session.parquet_schema`, no Spark job) so
+    the stream sees the same physical types the batch path does. ``ts``
+    may surface as either a proper TIMESTAMP (µs-encoded files) or a
+    raw-ns LongType (ns-encoded files under ``nanosAsLong``) —
+    :func:`stream_events` normalizes."""
+    return read_parquet(spark, path).schema
 
 SESSION_GAP = "30 minutes"
 
@@ -650,8 +652,8 @@ def strm_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             # file source schedules oldest-mtime-first: make order explicit
             os.utime(dst, (t0 + i, t0 + i))
 
-        schema = spark.read.parquet(
-            os.path.join(landing, "batch_000.parquet")
+        schema = read_parquet(
+            spark, os.path.join(landing, "batch_000.parquet")
         ).schema
         state: dict[str, DataFrame | None] = {"dim": None}
 
@@ -817,8 +819,8 @@ def strm_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(os.path.join(tmp, src), dst)
             os.utime(dst, (t0 + i, t0 + i))
 
-        schema = spark.read.parquet(
-            os.path.join(landing, "batch_000.parquet")
+        schema = read_parquet(
+            spark, os.path.join(landing, "batch_000.parquet")
         ).schema
         state: dict[str, DataFrame | None] = {"tbl": None}
 

@@ -8,12 +8,18 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from python_sql_etl_project_spark.load.incremental import LoadResult, Warehouse
+from python_sql_etl_project_spark.load import incremental
+from python_sql_etl_project_spark.load.incremental import (
+    STAGING,
+    LoadResult,
+    Warehouse,
+)
 from python_sql_etl_project_spark.plans.star_schema import build_star_schema
 from python_sql_etl_project_spark.report import format_message, get_sales_data
 from python_sql_etl_project_spark.sources.ingest import spark_df_from_pandas
 
 from . import fixtures
+from .test_cache_release import _cache_manager_empty, _persistent_rdds
 
 
 def _tables(spark):
@@ -77,8 +83,9 @@ def _data_files(path):
 
 
 def test_append_materializes_source_once(spark, tmp_path):
-    """One observed count per table: the source runs once, however many
-    counts the result reports, and the write reads the cache."""
+    """One action per table: the source runs once, however many counts
+    the result reports, because both counts are observed on the write
+    itself."""
     acc = spark.sparkContext.accumulator(0)
 
     def passes(_name):
@@ -99,12 +106,19 @@ def test_append_materializes_source_once(spark, tmp_path):
     assert wh.read("dim_sedes").count() - before == result.inserted
 
 
+def _staged(wh):
+    """What stages left under the warehouse's staging directory."""
+    root = os.path.join(wh.base_dir, STAGING)
+    return os.listdir(root) if os.path.isdir(root) else []
+
+
 def test_load_ordered_commits_in_fk_order_and_isolates_failures(
     spark, tmp_path
 ):
-    """Stages run concurrently, yet commits keep the reference's parent →
-    child → fact order (main.py:72-94); a stage that raises fails only
-    its own table; worker-thread jobs stay in the caller's job group."""
+    """Stages (and their writes) run concurrently, yet commits keep the
+    reference's parent → child → fact order (main.py:72-94); a stage
+    that raises fails only its own table and leaves no staging behind;
+    worker-thread jobs stay in the caller's job group."""
     sc = spark.sparkContext
 
     def boom(_key):
@@ -115,14 +129,14 @@ def test_load_ordered_commits_in_fk_order_and_isolates_failures(
         F.udf(boom, "boolean")("id_distribuidor")
     )
     wh = Warehouse(spark, str(tmp_path))
-    written = []
-    write = wh._write
+    committed = []
+    commit = wh._commit
 
-    def record(df, table):
-        written.append(table)
-        write(df, table)
+    def record(staging, result):
+        committed.append(result.table)
+        return commit(staging, result)
 
-    wh._write = record
+    wh._commit = record
     jsc = sc._jsc.sc()
 
     def job_ids():
@@ -142,7 +156,7 @@ def test_load_ordered_commits_in_fk_order_and_isolates_failures(
         sc.setLocalProperty("spark.jobGroup.id", None)
 
     order = [t for t in tables if t != "dim_distribuidores"]
-    assert written == order
+    assert committed == order
     assert [r.table for r in results] == list(tables)
     by_table = {r.table: r for r in results}
     assert by_table["dim_distribuidores"] == LoadResult(
@@ -152,12 +166,68 @@ def test_load_ordered_commits_in_fk_order_and_isolates_failures(
     assert by_table["fct_transacciones"].inserted == 5
     assert by_table["dim_clientes"].inserted == 4
     assert not wh.exists("dim_distribuidores")
+    assert _staged(wh) == []
 
     new_jobs = job_ids() - before
     in_group = set(sc.statusTracker().getJobIdsForGroup(group))
-    # one staged count per table, at least, ran on the worker threads
+    # one staged write per table, at least, ran on the worker threads
     assert len(new_jobs) >= len(tables)
     assert new_jobs <= in_group
+
+
+def test_stage_failure_after_its_write_removes_its_staging(
+    spark, tmp_path, monkeypatch
+):
+    """A stage that raises once its write has landed deletes the staged
+    files: nothing is published, and no staging is left behind."""
+
+    def lost(_obs):
+        raise RuntimeError("metrics lost")
+
+    monkeypatch.setattr(incremental, "_observed_count", lost)
+    wh = Warehouse(spark, str(tmp_path))
+    assert wh.incremental_append(_sedes(spark, range(3)), "dim_sedes") == (
+        LoadResult("dim_sedes", 0, 0, False)
+    )
+    assert not wh.exists("dim_sedes")
+    assert _staged(wh) == []
+
+
+def test_load_ordered_clears_staging_of_a_crashed_load(spark, tmp_path):
+    """Files a crashed load left in staging are deleted, never published."""
+    wh = Warehouse(spark, str(tmp_path))
+    orphan = os.path.join(wh.base_dir, STAGING, "dim_sedes-crashed")
+    os.makedirs(orphan)
+    _sedes(spark, range(10, 14)).write.parquet(os.path.join(orphan, "rows"))
+
+    assert wh.load_ordered({"dim_sedes": _sedes(spark, range(3))}) == [
+        LoadResult("dim_sedes", 3, 0, True)
+    ]
+    assert _staged(wh) == []
+    assert sorted(r.id_sede for r in wh.read("dim_sedes").collect()) == [0, 1, 2]
+
+
+def test_load_ordered_leaves_no_cache(spark, tmp_path):
+    """No table's load caches anything: no persisted RDD and no
+    CacheManager entry exist while a table commits, nor after the load."""
+    spark.catalog.clearCache()
+    before = set(_persistent_rdds(spark))
+    wh = Warehouse(spark, str(tmp_path))
+    cached = {}
+    commit = wh._commit
+
+    def record(staging, result):
+        cached[result.table] = (
+            set(_persistent_rdds(spark)) - before,
+            _cache_manager_empty(spark),
+        )
+        return commit(staging, result)
+
+    wh._commit = record
+    assert all(r.ok for r in wh.load_ordered(_tables(spark)))
+    assert cached == {t: (set(), True) for t in _tables(spark)}
+    assert set(_persistent_rdds(spark)) <= before
+    assert _cache_manager_empty(spark)
 
 
 @pytest.fixture(params=["broadcast", "shuffle"])
