@@ -85,11 +85,12 @@ def _observed_count(obs: Observation) -> int:
 
 
 class Warehouse:
-    """Parquet warehouse rooted at ``base_dir``."""
+    """Parquet warehouse of the ``pk_map`` tables rooted at ``base_dir``."""
 
-    def __init__(self, spark: SparkSession, base_dir: str):
+    def __init__(self, spark: SparkSession, base_dir: str, pk_map: dict = PK_MAP):
         self.spark = spark
         self.base_dir = base_dir
+        self.pk_map = dict(pk_map)
 
     def path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
@@ -170,7 +171,7 @@ class Warehouse:
         """The rows of ``df`` whose key is not in ``table`` yet (all of
         them for a new table, or for one without a PK mapping), and an
         observation counting the source rows the first action reads."""
-        pk = PK_MAP.get(table)
+        pk = self.pk_map.get(table)
         if pk is None:
             logger.warning("table %s has no PK mapping; direct append", table)
         seen = Observation()
@@ -255,7 +256,7 @@ class Warehouse:
             return LoadResult(table, 0, 0, False)
 
     def register_views(self) -> None:
-        for table in PK_MAP:
+        for table in self.pk_map:
             if self.exists(table):
                 self.read(table).createOrReplaceTempView(table)
 

@@ -32,7 +32,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from .incremental import LoadResult, Warehouse, _observed_count
+from .incremental import PK_MAP, LoadResult, Warehouse, _observed_count
 
 logger = logging.getLogger(__name__)
 
@@ -65,8 +65,9 @@ class JdbcWarehouse(Warehouse):
         driver: str = DERBY_DRIVER,
         num_partitions: int | None = None,
         batchsize: int = 10_000,
+        pk_map: dict = PK_MAP,
     ):
-        super().__init__(spark, base_dir=url)
+        super().__init__(spark, base_dir=url, pk_map=pk_map)
         self.url = url
         self.driver = driver
         self.num_partitions = num_partitions
@@ -98,9 +99,7 @@ class JdbcWarehouse(Warehouse):
             .option("driver", self.driver)
         )
         if self.num_partitions:
-            from .incremental import PK_MAP
-
-            pk = PK_MAP.get(table)
+            pk = self.pk_map.get(table)
             if pk is not None:
                 # Fan the scan out: executors issue range-bounded queries
                 # on the PK instead of one session streaming every row.

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import read_table
+from ..session import read_parquet, read_table
 
 
 # --------------------------------------------------------------------------
@@ -123,7 +123,7 @@ def compact_parquet(
     if (target_rows_per_file is None) == (target_file_bytes is None):
         raise ValueError("pass exactly one of target_rows_per_file / target_file_bytes")
     files = list_data_files(spark, src_dir)
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     if target_rows_per_file is not None:
         rows = df.count()
         n_out = max(1, math.ceil(rows / target_rows_per_file))
@@ -646,7 +646,7 @@ def ld_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM"),
         )
         write_partitioned(orders, "month", target, ORDER_MONTHS_HINT)
-        fact = spark.read.parquet(target)
+        fact = read_parquet(spark, target)
         dim = (
             fact.filter(
                 (F.col("o_orderpriority") == "1-URGENT")
@@ -903,7 +903,7 @@ def ld_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
             partitionOverwriteMode="dynamic",
         )
         rows = (
-            spark.read.parquet(target)
+            read_parquet(spark, target)
             .groupBy("month")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -1098,7 +1098,7 @@ def ld_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             # off and the month dir-key is not materialized — the census
             # needs only in-file columns
             return (
-                spark.read.parquet(*manifest)
+                read_parquet(spark, *manifest)
                 .groupBy("o_orderstatus")
                 .agg(
                     F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -1237,11 +1237,11 @@ def ld_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             f for f in manifest_v1 if not any(p in f for p in dropped)
         ] + _data_files(delta)
 
-        v1 = spark.read.parquet(*manifest_v1).select(
+        v1 = read_parquet(spark, *manifest_v1).select(
             F.col("o_orderkey").alias("k1"),
             F.col("o_totalprice").cast("decimal(14,2)").alias("p1"),
         )
-        v2 = spark.read.parquet(*manifest_v2).select(
+        v2 = read_parquet(spark, *manifest_v2).select(
             F.col("o_orderkey").alias("k2"),
             F.col("o_totalprice").cast("decimal(14,2)").alias("p2"),
         )
@@ -1337,7 +1337,7 @@ def ld_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             )
         )
         base_agg.write.mode("overwrite").parquet(snap_dir)
-        snapshot = spark.read.parquet(snap_dir)
+        snapshot = read_parquet(spark, snap_dir)
         delta_agg = (
             o.filter(~F.col("is_base"))
             .groupBy("month")
@@ -1790,7 +1790,7 @@ def src_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         )
         rows = (
-            spark.read.parquet(target)
+            read_parquet(spark, target)
             .filter(F.col("lang") == "en")
             .groupBy("source")
             .agg(

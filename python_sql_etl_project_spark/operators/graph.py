@@ -54,7 +54,8 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src×dst expansion is a narrow double-explode. A lineitem⋈lineitem
     self-join would shuffle the projection twice and still need the
     same downstream distinct. Stage ``edges`` of a ``session.Snapshots``
-    store: every graph query opens with it."""
+    store: every graph query opens with it. The build ends in an eager
+    checkpoint, so no consumer caches or releases the edges."""
 
     def build() -> DataFrame:
         parts_per_order = (
@@ -62,7 +63,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("l_orderkey")
             .agg(F.collect_set("l_partkey").alias("parts"))
         )
-        return (
+        return finalize_unpersist(
             parts_per_order.select(F.explode("parts").alias("src"), "parts")
             .select("src", F.explode("parts").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
@@ -170,12 +171,12 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     round joins only the nodes discovered LAST round to the edge list,
     anti-joins the seen set (in BFS, first discovery is the minimum
     level), and stops early when the frontier drains. ``localCheckpoint``
-    truncates lineage per round; the cached edge list is pre-partitioned
-    on the join key so rounds shuffle only the frontier. The oracle
-    derives identical levels with a recursive CTE. Integer levels —
-    nothing to round, bit-identical across engines.
+    truncates lineage per round; every round probes the checkpointed
+    edge list with the frontier, so rounds shuffle only the frontier.
+    The oracle derives identical levels with a recursive CTE. Integer
+    levels — nothing to round, bit-identical across engines.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     levels = (
         pairs.agg(F.min("src").alias("node"))
         .withColumn("level", F.lit(0).cast("int"))
@@ -211,9 +212,6 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         if frontier.isEmpty():
             break
         levels = levels.unionByName(frontier)
-    # levels is already checkpointed each round (lineage no longer
-    # references pairs), so the edge cache can be dropped directly
-    pairs.unpersist()
     return levels.select(
         F.col("node").alias("part_key"), F.col("level").cast("int").alias("level")
     )
@@ -264,7 +262,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids; wedge and triangle counts are exact integers, and the one
     float (clustering coefficient) is a single rounded division.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     oe = (
         pairs.join(deg.withColumnRenamed("src", "a_n").withColumnRenamed("deg", "da"),
@@ -306,7 +304,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "global_clustering"
         ),
     )
-    return finalize_unpersist(out, oe, pairs)
+    return finalize_unpersist(out, oe)
 
 
 LINKPRED_TOP_K = 20
@@ -489,7 +487,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2 of it only sits ON an integer at exact powers of two, where
     both engines agree), counts are integers throughout.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     out = (
         deg.select(
@@ -505,7 +503,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("deg").cast("bigint").alias("max_degree"),
         )
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 @query(
@@ -551,7 +549,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⋈degree join shuffles on node id twice — the same plan cost as
     one PageRank round.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     )
@@ -593,7 +591,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("assortativity"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 #: k-core threshold: data-derived — two-thirds of the graph's mean
@@ -685,7 +683,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1), each round maintains the degree vector incrementally. A
     node's degree within the surviving set changes ONLY by its edge
     count into the nodes removed THIS round, so the per-round work is
-    one cached-edge pass probed by a broadcast of the (tiny) removed
+    one checkpointed-edge pass probed by a broadcast of the (tiny) removed
     set, aggregating just the matched edges, then a broadcast left
     join of the loss counts onto the survivor vector. Same
     O(rounds × |E|-scan) pass count, but the per-round HashAggregate
@@ -708,12 +706,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds degrees within n_R, and the ``d > 0`` filter mirrors the
     GROUP BY dropping members with no surviving edge.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # ONE aggregate job yields both k and the starting node count (r12):
     # |nodes| = |deg| rows by construction (deg groups by src), so the
     # old separate distinct+count job before the loop was a second full
-    # pass over the cached edges for a number this aggregate already
+    # pass over the edges for a number this aggregate already
     # knows.
     k, n_prev = deg.agg(
         F.expr(
@@ -726,7 +724,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty edge list → sum(deg) is NULL; return the declared empty
         # schema instead of letting `d >= NULL` raise (sibling graph
         # queries return empty frames on empty input)
-        pairs.unpersist()
         return spark.createDataFrame(
             [], "part_key bigint, core_degree bigint, k_threshold bigint"
         )
@@ -765,7 +762,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d").cast("bigint").alias("core_degree"),
         F.lit(k).cast("bigint").alias("k_threshold"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 #: Synchronous label-propagation rounds (pinned on both engines).
@@ -818,9 +815,9 @@ def _lpa_labels(
     shape paid an exchange per groupBy plus the two SortAggregate
     sorts; at sf0.1 the 3-round loop measured 6.95s (struct), 5.69s
     (packed max alone), 4.44s (packed max + single repartition) —
-    bit-identical outputs. Pre-partitioning the CACHED edge list by src
+    bit-identical outputs. Pre-partitioning the edge list by src
     instead (zero per-round exchanges) measured 5.74s + a 2.5x costlier
-    cache build — rejected. At cluster scale the same plan holds: when
+    edge build — rejected. At cluster scale the same plan holds: when
     the label vector outgrows the broadcast threshold, Catalyst falls
     back to a dst-keyed shuffle join and the repartition(src) stays the
     single agg-side shuffle.
@@ -916,7 +913,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity, never determinism).
 
     Scale shape: per round ONE shuffle — join the |V|-row label vector
-    to the cached edge list (broadcast while the vector fits, dst-keyed
+    to the checkpointed edge list (broadcast while the vector fits, dst-keyed
     shuffle join beyond), repartition the narrow joined rows on src
     once, then count (node, label) pairs and take the decimal-packed
     argmax in two exchange-free HashAggregates (see
@@ -924,12 +921,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers). ``localCheckpoint`` per round truncates lineage;
     |V|-sized state total, the same Pregel-as-joins shape as PageRank.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     labels = _lpa_labels(spark, sf_dir, pairs, fresh=True)
     out = labels.select(
         F.col("node").alias("part_key"), F.col("label").alias("community")
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 @query(
@@ -986,10 +983,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical on both engines, which is what the hash gate needs).
 
     Scale shape: the LPA rounds as in ``graph_label_propagation``;
-    scoring adds two label-vector joins onto the cached edge list
+    scoring adds two label-vector joins onto the checkpointed edge list
     (internal-edge census) and a |communities|-row aggregate with the
     1-row degree total broadcast."""
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     labels = _lpa_labels(spark, sf_dir, pairs)
     per_node = labels.join(
@@ -1042,7 +1039,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1000000
         ).alias("contribution"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 def min_step(edges: DataFrame, vec: DataFrame, hop: int = 0) -> DataFrame:
@@ -1162,12 +1159,12 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity.
 
     Scale shape: per round ONE shuffle — the |V|-row label vector joins
-    the cached edge list and ``min`` per dst is map-side-combinable;
+    the checkpointed edge list and ``min`` per dst is map-side-combinable;
     ``localCheckpoint`` per round truncates lineage — the same
     Pregel-as-joins shape as PageRank/LPA; at 1000 executors each
     round is a single co-partitioned shuffle on node id.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     seed = (
         pairs.select(F.col("src").alias("node"))
         .distinct()
@@ -1179,7 +1176,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 #: Pointer-doubling CC rounds. Each combined round takes one neighbor
@@ -1248,13 +1245,13 @@ def graph_cc_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels only ever hold node ids that exist in the label vector.
 
     Scale shape: per round TWO co-partitioned shuffles — the
-    :func:`min_step` aggregate over the cached edge list (map-side-
+    :func:`min_step` aggregate over the checkpointed edge list (map-side-
     combined min per dst), and its result against the label vector on
     the previous label (the jump). :func:`fixpoint` runs at most
     {CC_PD_ROUNDS} rounds and stops at a fixed point, checkpointing each
     round exactly as the other Pregel-as-joins operators.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     seed = (
         pairs.select(F.col("src").alias("node"))
         .distinct()
@@ -1266,7 +1263,7 @@ def graph_cc_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_node"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 #: Multi-source BFS: seed count and synchronous round count. The
@@ -1325,12 +1322,12 @@ def graph_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tested SFs.
 
     Scale shape: seed pick is a dim-grain top-k on the degree census;
-    each round is ONE co-partitioned shuffle (reached-vector ⋈ cached
+    each round is ONE co-partitioned shuffle (reached-vector ⋈ checkpointed
     edges, min per dst map-side-combinable), checkpointed by
     :func:`fixpoint` to truncate the iterative lineage. The reached
     vector is |V|-bounded — never edge- or fact-scale.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     seed = (
         deg.orderBy(F.desc("deg"), "src")
@@ -1343,7 +1340,7 @@ def graph_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
         F.min("node").cast("bigint").alias("min_part_key"),
     )
-    return finalize_unpersist(out, pairs)
+    return out
 
 
 @query(
@@ -1401,7 +1398,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     |triangles|-row explode and a node-grain aggregate. The output is
     |V| rows — dimension-bounded.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     oe = (
         pairs.join(
@@ -1450,7 +1447,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering_micro"),
         )
     )
-    return finalize_unpersist(out, oe, pairs)
+    return finalize_unpersist(out, oe)
 
 
 #: HITS: L1-normalized hub/authority mass in integer micro-units; two

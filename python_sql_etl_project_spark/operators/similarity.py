@@ -870,7 +870,8 @@ def _scaled_codebook(emb: DataFrame, spark: SparkSession, sf_dir: str) -> DataFr
     roughly constant as the corpus grows, where the fixed 10-label
     codebook's cell population grows linearly and its probes⋈home
     candidate space quadratically (measured 12.96–16.5× wall at 8× data
-    before the swap). Stage ``codebook`` of a ``session.Snapshots`` store.
+    before the swap). Stage ``codebook`` of a ``session.Snapshots`` store,
+    materialized by its build: consumers read the trained centroids.
     """
 
     def build() -> DataFrame:
@@ -882,7 +883,7 @@ def _scaled_codebook(emb: DataFrame, spark: SparkSession, sf_dir: str) -> DataFr
         for _ in range(2):
             assign = _lloyd_assign(emb, cents)
             cents = _pack_centroids(_lloyd_update(emb, assign))
-        return cents
+        return finalize_unpersist(cents)
 
     return snapshot(spark, sf_dir, "codebook", build)
 
@@ -2712,21 +2713,20 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     logarithm); relevance and ranks are integers; the final ratio uses
     the half-up integer identity. Ranking ties break on neighbor_id.
 
-    Scale shape: the {N_QUERIES}-row query set broadcasts against the
-    corpus (the bounded sim_knn_brute pattern — at production scale the
-    query side is an eval set, inherently small); one rank window per
+    Scale shape: the {N_QUERIES}-row :func:`_query_set` broadcasts against
+    the corpus (the bounded sim_knn_brute pattern — at production scale
+    the query side is an eval set, inherently small); one rank window per
     query and one aggregate to query grain. Corpus-side cost is a
     single scan.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = _query_set(emb, N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qe"),
     )
     scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
+        q.join(emb, F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("qlabel").alias("label"),

@@ -262,13 +262,14 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     return StructType.fromJson(json.loads(schema.asNullable().json()))
 
 
-def read_parquet(spark: SparkSession, path: str):
-    """``spark.read.parquet(path)`` without the schema-inference job: the
-    schema comes from :func:`parquet_schema`. A path with no data file
-    goes to the plain read, which raises as it always has."""
-    schema = parquet_schema(spark, path)
+def read_parquet(spark: SparkSession, *paths: str):
+    """``spark.read.parquet(*paths)`` without the schema-inference job:
+    the first path's :func:`parquet_schema`, one footer for all paths as
+    in Spark without ``mergeSchema``. A first path with no data file goes
+    to the plain read, which raises as it always has."""
+    schema = parquet_schema(spark, paths[0])
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return reader.parquet(*paths)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):
@@ -308,10 +309,9 @@ def finalize_unpersist(df, *cached):
     cached until someone uncaches it, and a caller cannot see a persist
     buried in the plan it was handed. ``DataFrame.unpersist()`` does not
     cascade into a subplan cache, so pass each persisted frame itself.
-    Iterative operators (PageRank, BFS, LSH audits) persist an edge list
-    or fingerprint stage that every round re-reads; checkpointing the
-    final frame breaks that lineage, after which those caches can be
-    dropped at once.
+    Iterative operators (PageRank, HITS, LSH audits) persist a frame
+    that every round re-reads; checkpointing the final frame breaks that
+    lineage, after which those caches can be dropped at once.
 
     Trade-off: the checkpoint's blocks are freed when the returned
     DataFrame is garbage-collected, not at an explicit ``unpersist``
@@ -345,11 +345,11 @@ class Snapshots:
     on the session, and every :func:`snapshot` lookup on that session
     goes through it until :meth:`close`.
 
-    A stage is built as an eager ``localCheckpoint`` — materialized,
-    lineage-free. A build follows the cache-ownership rule of
-    :func:`finalize_unpersist`, so it leaves no cache for the store to
-    release. A local checkpoint is not registered in the CacheManager,
-    so neither ``spark.catalog.clearCache()`` nor a consumer's
+    The store keeps what ``build()`` returns: every builder ends in an
+    eager ``localCheckpoint``, so a stage is materialized once,
+    lineage-free, with or without a store, and no consumer caches it. A
+    local checkpoint is not in the CacheManager, so neither
+    ``spark.catalog.clearCache()`` nor a consumer's
     :func:`finalize_unpersist` can drop it: the store owns it, and its
     blocks are freed once :meth:`close` has dropped it and the frame is
     garbage-collected. ``builds`` records ``(sf_dir, stage, seconds)``
@@ -379,7 +379,7 @@ class Snapshots:
         key = (sf_dir, stage)
         if fresh or key not in self._frames:
             t0 = time.perf_counter()
-            self._frames[key] = build().localCheckpoint(eager=True)
+            self._frames[key] = build()
             self.builds.append((sf_dir, stage, time.perf_counter() - t0))
         return self._frames[key]
 

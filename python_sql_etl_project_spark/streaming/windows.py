@@ -429,11 +429,12 @@ def stream_incremental_load(
     append is the parquet-only equivalent under the single-writer
     assumption.
 
-    Returns the number of rows inserted across all batches.
+    ``warehouse`` must map ``table`` to its key (``pk_map={table:
+    "event_id"}``): without one the append is not idempotent. Returns the
+    number of rows inserted across all batches.
     """
-    from ..load.incremental import PK_MAP
-
-    PK_MAP.setdefault(table, "event_id")
+    if table not in warehouse.pk_map:
+        raise ValueError(f"warehouse has no primary key for {table}")
     inserted = {"n": 0}
 
     def load_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1196,14 +1197,13 @@ def strm_replay_idempotent_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from ..load.incremental import PK_MAP, Warehouse
+    from ..load.incremental import Warehouse
 
     table = "events_replay_wh"
-    PK_MAP.setdefault(table, "event_id")
     base = _tempfile.mkdtemp(prefix="replay_wh_")
     ck = _tempfile.mkdtemp(prefix="ck_replay_")
     try:
-        wh = Warehouse(spark, base)
+        wh = Warehouse(spark, base, pk_map={table: "event_id"})
         dup_dir = _events_dup_stream_dir(sf_dir)
 
         def load_batch(batch_df: DataFrame, _batch_id: int) -> None:

@@ -8,9 +8,9 @@ returned plan is a leak its caller cannot see. These tests pin:
 
 * every listed consumer leaves the CacheManager empty after one action
   (its result checkpoint is outside the CacheManager, freed on GC);
-* under a ``session.Snapshots`` store the stage is the store's local
-  checkpoint, so a consumer must LEAVE it materialized for its siblings
-  (the bench contract).
+* a shared stage is its builder's local checkpoint, which a consumer
+  neither caches nor releases: under a ``session.Snapshots`` store it
+  must LEAVE it materialized for its siblings (the bench contract).
 """
 
 from __future__ import annotations
@@ -46,6 +46,12 @@ RELEASING = [
     "txt_repetition_profile",
     "sim_ivf_topk",
     "sim_ivf_recall_audit",
+    # shared-stage consumers: the stage is its builder's checkpoint, and
+    # a consumer caches nothing of it
+    *sorted(n for n in registry.QUERIES if n.startswith("graph_")),
+    "sim_ivf_scaled_cells",
+    "sim_ivfpq_search",
+    "sim_ivfpq_residual",
 ]
 
 

@@ -58,6 +58,28 @@ def test_no_data_file_reads_as_before(spark, tmp_path):
         read_parquet(spark, str(tmp_path))
 
 
+def test_manifest_read_submits_no_job(spark, tmp_path):
+    """A snapshot manifest is a list of leaf files from several partition
+    directories: one footer gives the schema Spark infers for all of
+    them, and no job runs to infer it."""
+    target = str(tmp_path / "orders")
+    read_table(spark, SF_SMOKE, "orders").withColumn(
+        "bucket", F.col("o_orderkey") % 3
+    ).write.partitionBy("bucket").parquet(target)
+    manifest = sorted(glob.glob(os.path.join(target, "bucket=*", "*.parquet")))
+    assert len({os.path.dirname(f) for f in manifest}) == 3
+    sc = spark.sparkContext
+    group = "manifest-read-schema"
+    sc.setJobGroup(group, group)
+    try:
+        schema = read_parquet(spark, *manifest).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert schema == spark.read.parquet(*manifest).schema
+
+
 def test_read_table_submits_no_job(spark):
     sc = spark.sparkContext
     group = "read-table-schema"

@@ -241,7 +241,6 @@ _BOUNDING_NODES = ("Aggregate", "Deduplicate", "GlobalLimit", "Sample")
 #: by something the node-detector can't see (e.g. a constant key-range
 #: filter that fixes the row count independent of corpus size).
 FACT_HINT_ALLOWED = {
-    "sim_ndcg_eval": "eval-query set is Filter(vec_id < 8): constant 8 rows",
     "sim_kmeans_codebook": (
         "initial codebook is Filter(vec_id < K): constant K rows; later "
         "iterations' codebooks pass through the Aggregate bound"
@@ -353,13 +352,15 @@ SF100_THRESHOLD = 64 * 1024 * 1024 // 10_000
         "sim_matryoshka_audit",
         "sim_ivf_recall_audit",
         "sim_mmr_diversify",
+        "sim_ndcg_eval",
     ],
 )
 def test_constant_query_set_broadcasts_past_the_threshold(
     spark, name, monkeypatch
 ):
-    """The brute-force k-NN family and the MMR pool build join the
-    corpus to a constant query set on a non-equi condition, unhinted.
+    """The brute-force k-NN family, the NDCG eval and the MMR pool build
+    join the corpus to a constant query set on a non-equi condition,
+    unhinted.
     With the broadcast threshold scaled to sf100 (the corpus past it),
     the query set must still be broadcast by its planner-visible row
     count: a cartesian product here is the large-scale failure."""

@@ -1,14 +1,45 @@
-"""Lifecycle of the ``session.Snapshots`` store: a stored stage is a
-local checkpoint the store owns, built once per (sf_dir, stage) and
-served to every consumer on the session it is installed on."""
+"""Lifecycle of the ``session.Snapshots`` store: a stored stage is the
+local checkpoint its builder returns, which the store owns, built once
+per (sf_dir, stage) and served to every consumer on the session it is
+installed on."""
 
 from __future__ import annotations
 
+import pytest
+
 from python_sql_etl_project_spark import registry
-from python_sql_etl_project_spark.operators import dedup
-from python_sql_etl_project_spark.session import Snapshots
+from python_sql_etl_project_spark.operators import dedup, graph, similarity
+from python_sql_etl_project_spark.session import Snapshots, read_table
 
 registry.load_all()
+
+#: stage → its builder, called with no store installed
+STAGES = {
+    "edges": lambda spark, sf: graph._copurchase_pairs(spark, sf),
+    "lpa_labels": lambda spark, sf: graph._lpa_labels(
+        spark, sf, graph._copurchase_pairs(spark, sf)
+    ),
+    "shingles": lambda spark, sf: dedup.shingles(spark, sf),
+    "codebook": lambda spark, sf: similarity._scaled_codebook(
+        read_table(spark, sf, "embeddings"), spark, sf
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(STAGES))
+def test_stage_builder_returns_a_materialized_frame(spark, sf_dir, stage):
+    """A shared stage is materialized once, by its builder: what it
+    returns reads checkpointed blocks, not the source tables, so a
+    consumer has nothing to cache."""
+    plan = STAGES[stage](spark, sf_dir)._jdf.queryExecution().executedPlan()
+    assert "Scan parquet" not in plan.toString(), plan.toString()
+
+
+def test_store_keeps_what_the_builder_returns(spark, sf_dir):
+    frame = spark.range(3)
+    with Snapshots(spark) as store:
+        assert store.get(sf_dir, "any", lambda: frame) is frame
+        assert store.get(sf_dir, "any", lambda: spark.range(4)) is frame
 
 
 def _builds(store, stage):

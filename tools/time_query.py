@@ -6,8 +6,10 @@ Usage: python tools/time_query.py [-n REPEATS] [--sf DIR] name [name ...]
 Mirrors bench.py exactly: noop sink (full-plan execution, no driver
 collection), clearCache + JVM GC before each run, min-of-N reported with
 the raw spread, warm-up of the JVM/codegen/Python-worker pool first.
-Intended for A/B isolation during optimization rounds; the tracked
-numbers stay bench.py's.
+Each run executes under its own job group, and the number of Spark jobs
+it submitted is printed next to its wall time: a deterministic counter
+beside the noisy one. Intended for A/B isolation during optimization
+rounds; the tracked numbers stay bench.py's.
 """
 
 from __future__ import annotations
@@ -47,18 +49,23 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
 
-    jvm_system = spark.sparkContext._jvm.java.lang.System
+    sc = spark.sparkContext
+    jvm_system = sc._jvm.java.lang.System
     for name in args.names:
         fn = queries[name]
-        runs = []
-        for _ in range(args.repeats):
+        runs, jobs = [], []
+        for i in range(args.repeats):
             spark.catalog.clearCache()
             jvm_system.gc()
-            spark.sparkContext.setJobDescription(f"time:{name}")
+            group = f"time:{name}:{i}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             runs.append(round(time.perf_counter() - t0, 3))
-        print(f"{name}: min={min(runs)} runs={runs}", flush=True)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        print(f"{name}: min={min(runs)} runs={runs} jobs={jobs}", flush=True)
 
 
 if __name__ == "__main__":
