@@ -32,7 +32,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from .incremental import PK_MAP, LoadResult, Warehouse, _observed_count
+from .incremental import LoadResult, Warehouse, _observed_count
 
 logger = logging.getLogger(__name__)
 
@@ -65,9 +65,8 @@ class JdbcWarehouse(Warehouse):
         driver: str = DERBY_DRIVER,
         num_partitions: int | None = None,
         batchsize: int = 10_000,
-        pk_map: dict = PK_MAP,
     ):
-        super().__init__(spark, base_dir=url, pk_map=pk_map)
+        super().__init__(spark, base_dir=url)
         self.url = url
         self.driver = driver
         self.num_partitions = num_partitions

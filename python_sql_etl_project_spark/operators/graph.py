@@ -55,7 +55,9 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join would shuffle the projection twice and still need the
     same downstream distinct. Stage ``edges`` of a ``session.Snapshots``
     store: every graph query opens with it. The build ends in an eager
-    checkpoint, so no consumer caches or releases the edges."""
+    checkpoint, so no consumer caches or releases the edges; its
+    distinct keeps one partition per core (AQE coalesces it to 5 at
+    sf0.1 on 4 cores, which slows every round that re-reads it)."""
 
     def build() -> DataFrame:
         parts_per_order = (
@@ -67,6 +69,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts_per_order.select(F.explode("parts").alias("src"), "parts")
             .select("src", F.explode("parts").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
+            .repartition(spark.sparkContext.defaultParallelism, "src")
             .distinct()
         )
 
